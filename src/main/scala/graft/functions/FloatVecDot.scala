@@ -77,9 +77,30 @@ case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpres
 /** JVM kernels for composite vector ops (called from generated code). */
 object VecKernels {
 
-  /** Spark-identical round-half-up at 6dp (Catalyst Round semantics). */
+  /** Spark-identical round-half-up at 6dp (Catalyst Round semantics:
+    * NaN and ±Inf pass through unchanged, where BigDecimal would throw).
+    */
   def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** `round(dot / (na * nb), 6)` exactly as Catalyst evaluates it under
+    * ANSI mode: a zero divisor throws, as Spark's `Divide` does.
+    */
+  def cos6(dot: Double, na: Double, nb: Double): Double = {
+    val den = na * nb
+    if (den == 0.0) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero in a cosine score")
+    round6(dot / den)
+  }
+
+  /** [[FloatVecDot]]'s fold over two float arrays (clamped to shorter). */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
 
   /** Single-pass cosine over two float arrays — same accumulation order
     * as FloatVecCos (dot and norms left-to-right in double).
@@ -102,34 +123,33 @@ object VecKernels {
   def round0(x: Double): Long =
     java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
-  private def maxAbs(v: ArrayData): Double = {
-    val n = v.numElements()
+  private def maxAbs(v: Array[Float]): Double = {
     var m = 0.0
     var i = 0
-    while (i < n) { val a = math.abs(v.getFloat(i).toDouble); if (a > m) m = a; i += 1 }
+    while (i < v.length) { val a = math.abs(v(i).toDouble); if (a > m) m = a; i += 1 }
     m
   }
 
   /** int8 quantization: q_i = round(v_i / max|v| * 127) as longs. */
-  def quantize(v: ArrayData): ArrayData = {
-    val n = v.numElements()
+  def quantize(v: Array[Float]): Array[Long] = {
     val scale = maxAbs(v)
-    val out = new Array[Long](n)
+    val out = new Array[Long](v.length)
     if (scale != 0.0) {
       var i = 0
-      while (i < n) { out(i) = round0(v.getFloat(i).toDouble / scale * 127.0); i += 1 }
+      while (i < v.length) { out(i) = round0(v(i).toDouble / scale * 127.0); i += 1 }
     }
-    new GenericArrayData(out)
+    out
   }
+
+  def quantize(v: ArrayData): ArrayData = new GenericArrayData(quantize(v.toFloatArray()))
 
   /** [scale_micros, q_sum, q_norm2] of the int8 quantization, one pass. */
   def q8Stats(v: ArrayData): ArrayData = {
-    val q = quantize(v)
-    val n = q.numElements()
+    val f = v.toFloatArray()
+    val q = quantize(f)
     var s = 0L; var s2 = 0L
-    var i = 0
-    while (i < n) { val x = q.getLong(i); s += x; s2 += x * x; i += 1 }
-    new GenericArrayData(Array(round0(maxAbs(v) * 1000000.0), s, s2))
+    q.foreach { x => s += x; s2 += x * x }
+    new GenericArrayData(Array(round0(maxAbs(f) * 1000000.0), s, s2))
   }
 
   /** Integer dot product over two long arrays (clamped to shorter). */
@@ -138,6 +158,14 @@ object VecKernels {
     var s = 0L
     var i = 0
     while (i < n) { s += a.getLong(i) * b.getLong(i); i += 1 }
+    s
+  }
+
+  def lvecDot(a: Array[Long], b: Array[Long]): Long = {
+    val n = math.min(a.length, b.length)
+    var s = 0L
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
     s
   }
 

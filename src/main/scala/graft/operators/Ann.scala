@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 import graft.Graft
-import graft.functions.VectorOps
+import graft.functions.{VecKernels, VectorOps}
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -833,7 +834,9 @@ object Ann {
     */
   private val maxLevelMemo = scala.collection.mutable.Map.empty[String, Long]
   private[graft] def hnswEntryState(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val lv = hnswLevels(s, dir)
+    // lazy: reading the corpus infers its parquet schema with a job, which
+    // a warm call (both memos hit) must not pay
+    lazy val lv = hnswLevels(s, dir)
     val ml = synchronized(maxLevelMemo.get(dir)).getOrElse {
       val mlRow = lv.agg(max(col("level")).as("ml")).collect().head
       val v = if (mlRow.isNullAt(0)) 0L else mlRow.getLong(0)
@@ -1352,21 +1355,20 @@ object Ann {
     *    unverifiable cross-engine).
     *
     * Scale shape: the graph is the big side (k·N edges, memoized — a
-    * serving tier's loaded index); per round the state frame is
-    * Q·beam rows, candidates ≤ Q·beam·2k. At the keyed query's bounded
-    * Q the state rides broadcast joins (zero shuffles of the index
-    * beyond its one cached read per round); a production-sized query
-    * batch flips the SAME plan to hash joins keyed on node — cost per
-    * round is Q·beam·2k score kernels, INDEPENDENT of corpus size N,
-    * which is the entire point of serving through a navigable graph
-    * instead of scanning.
+    * serving tier's loaded index); per round the state is Q·beam rows,
+    * candidates ≤ Q·beam·2k. At the keyed query's bounded Q the rounds
+    * run in process over a driver snapshot of the index
+    * ([[driverWalk]]); a production-sized query batch runs them as
+    * Spark jobs — cost per round is Q·beam·2k score kernels,
+    * INDEPENDENT of corpus size N, which is the entire point of serving
+    * through a navigable graph instead of scanning.
     */
   /** THE SERVING INDEX of the flat-graph searches: undirected adjacency
     * with the destination's vector, norm and label metadata attached
     * ONCE (2kN rows, memoFlat: eagerly materialized + plan-flattened,
-    * session-shared) — the frame a serving tier holds in memory. Every
-    * beam round is then one broadcast-join probe of this cache: no
-    * per-round vector re-attach, no extra broadcast stage, and no
+    * session-shared) — the frame a serving tier holds in memory, read
+    * whole by the driver walks' snapshot and probed per round by the
+    * distributed walks: no per-round vector re-attach and no
     * per-action re-planning of the deep build plan (the memoFlat
     * rationale — measured 7× per probe; serving off this frame now
     * matches serving off a written generation). The label rides along
@@ -1395,10 +1397,10 @@ object Ann {
   /** Size-derived partition count for a SERVING INDEX frame: ~2kN
     * undirected edge rows × ~300 B payload, sized to ≥128 MB per
     * partition (guide §2.2: partitions in the 100 MB–1 GB range, never
-    * a core-count constant). Every beam/descent ROUND probes the
-    * checkpointed index with one job, and each job runs one task per
-    * index partition: at sf0.1 (2k vectors → ~5 MB index) the warm
-    * layered walk measured job-count-bound at ~45 ms/job across 32
+    * a core-count constant). Every distributed (or Spark-probe) round
+    * probes the checkpointed index with one job, and each job runs one
+    * task per index partition: at sf0.1 (2k vectors → ~5 MB index) the
+    * warm layered walk measured job-count-bound at ~45 ms/job across 32
     * micro-partitions of ~150 KB — this collapses those to ONE task —
     * while at 10^9 vectors it yields ~4.5k partitions of ~128 MB. AQE
     * cannot make this choice for the frame: coalescePartitions'
@@ -2164,10 +2166,11 @@ object Ann {
     * deduped walks each re-derived this two-job state per query.
     */
   private[graft] def hnswDedupedEntryState(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val (_, _, fin) = dedupCollapse(s, dir)
-    val eS = Graft.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      .join(fin.filter(col("canon") === col("vec_id")).select(col("vec_id")), "vec_id")
-    val lvS = hnswLevelsOver(eS)
+    // lazy for the same reason as hnswEntryState's level frame
+    lazy val eS = Graft.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+      .join(dedupCollapse(s, dir)._3.filter(col("canon") === col("vec_id")).select(col("vec_id")),
+        "vec_id")
+    lazy val lvS = hnswLevelsOver(eS)
     val ml = synchronized(maxLevelMemo.get(s"dedup:$dir")).getOrElse {
       val mlRow = lvS.agg(max(col("level")).as("ml")).collect().head
       val v = if (mlRow.isNullAt(0)) 0L else mlRow.getLong(0)
@@ -2620,26 +2623,23 @@ object Ann {
 
   def graphSearch(s: SparkSession, dir: String, k: Int = GraphSearchK,
                   beam: Int = GraphSearchBeam,
-                  rounds: Int = GraphSearchRounds): DataFrame = {
-    // entry layer: each query scores the √N centroid set once (one job)
-    val cents = Graft.embeddings(s, dir)
-      .filter(col("vec_id") < sqrtFanout(Graft.tableRows(s, dir, "embeddings")))
-      .select(col("vec_id").as("node"), col("embedding").as("nv"))
-    beamSearchOver(s, graphSearchIndex(s, dir), cents, dir, k, beam, rounds)
-  }
+                  rounds: Int = GraphSearchRounds): DataFrame =
+    beamSearchOver(s, graphSearchIndex(s, dir), flatEntrySet(s, dir), dir, k, beam, rounds)
 
   /** Query-batch size above which the beam rounds run fully distributed
-    * instead of driver-ranked. The driver path funnels Q·beam·2k scored
-    * rows through the driver per round and broadcasts Q·beam frontier
-    * rows (with query vectors) back out — provably bounded for a keyed
-    * Q=20 request, linear-in-Q driver state for a batch-serving job.
-    * Above this cutoff the SAME round semantics run as Spark jobs
-    * (distinct + per-query window per round) whose per-round exchange
-    * overhead is amortized by the batch (the clustersOf threshold
-    * pattern, Dedup.scala clustersOf).
+    * instead of driver-ranked. The driver path holds Q·beam state and
+    * scores Q·beam·2k candidates per round on the driver — provably
+    * bounded for a keyed Q=20 request, linear-in-Q driver state for a
+    * batch-serving job. Above this cutoff the SAME round semantics run
+    * as Spark jobs (distinct + per-query window per round) whose
+    * per-round exchange overhead is amortized by the batch (the
+    * clustersOf threshold pattern, Dedup.scala clustersOf).
     *
     * Placement is measured on BOTH sides of the threshold (r17,
-    * docs/bench_r17_crossover.md): below it the driver path wins
+    * docs/bench_r17_crossover.md) with the driver path on the
+    * Spark-probe neighbour source (one collect job per round); the
+    * in-process snapshot source only makes the driver side cheaper, and
+    * the crossover was not re-measured with it. Below it the driver path wins
     * wall-clock locally (Q=2000 at 10×: driver 4.0-6.7s vs dist
     * 8.3-17.5s across the four walks — single-JVM collects are cheap);
     * above it the DISTRIBUTED path wins on every walk (Q=16384: flat
@@ -2654,125 +2654,472 @@ object Ann {
     */
   val GraphSearchDistQ = 8192
 
-  /** Bounded routing probe for the four routed serving entries: does
-    * the explicit query batch exceed `distThreshold`? A plain
-    * `queries.count()` fully evaluates an arbitrary caller frame just
-    * to make a ≷ comparison (and a non-deterministic frame could route
-    * on a different cardinality than the walk then sees); limiting to
-    * threshold+1 rows makes the probe job cost bounded by the
-    * threshold, never the batch.
+  /** The request's query rows (q_id, qv) for a driver-ranked walk, or
+    * None when the batch exceeds `distThreshold` and the rounds run
+    * distributed. Collecting at most threshold+1 rows is both the
+    * routing probe and the walk's one query read, so the probe costs no
+    * job of its own, is bounded by the threshold rather than the batch,
+    * and a non-deterministic caller frame is walked with exactly the
+    * rows it was routed on.
     */
-  private def exceedsQ(queries: DataFrame, distThreshold: Int): Boolean =
+  private def driverQueries(queries: DataFrame, distThreshold: Int): Option[Array[Row]] = {
     // clamped +1: specs pin a path with distThreshold = Int.MaxValue,
     // which a naive +1 would overflow into a negative LIMIT
-    queries.limit(math.min(distThreshold.toLong + 1, Int.MaxValue).toInt)
-      .count() > distThreshold
+    val rows = queries.select(col("q_id"), col("qv"))
+      .limit(math.min(distThreshold.toLong + 1, Int.MaxValue).toInt).collect()
+    if (rows.length > distThreshold) None else Some(rows)
+  }
+
+  private def queryRows(queries: DataFrame): Array[Row] =
+    queries.select(col("q_id"), col("qv")).collect()
+
+  /** How a driver-ranked walk scores a query against a node: the float
+    * cosine round(fvec_dot(v, qv) / (nrm·qnrm), 6) or the int8 one
+    * round(lvec_dot(q, q8) / (n8·qn8), 6). The in-process fold
+    * ([[VecKernels]]) is the same double arithmetic as the Catalyst
+    * expression, so the two neighbour sources return bit-identical
+    * scores; node norms come from the frames, query norms are
+    * sqrt(dot(q, q)).
+    */
+  private[graft] sealed abstract class WalkScorer(val vec: String, val nrm: String,
+                                                  val entryVec: String, val elemBytes: Int,
+                                                  val qType: DataType) extends Serializable {
+    def query(qv: Array[Float]): (AnyRef, Double)
+    def dot(a: AnyRef, b: AnyRef): Double
+    /** A vector cell of a collected row, as the array [[dot]] reads. */
+    def read(r: Row, i: Int): AnyRef
+    def dotCol(a: Column, b: Column): Column
+    /** Norm of an entry row: float entry sets carry no norm column. */
+    def entryNrm: Column
+    def score(v: AnyRef, n: Double, q: WalkQuery): Double = VecKernels.cos6(dot(v, q.vec), n, q.nrm)
+    def scoreCol(v: Column, n: Column): Column = round(dotCol(v, col("qv")) / (n * col("qnrm")), 6)
+  }
+
+  private[graft] object FloatCos extends WalkScorer("dv", "dnrm", "nv", 4, ArrayType(FloatType, false)) {
+    def query(qv: Array[Float]): (AnyRef, Double) = (qv, math.sqrt(VecKernels.dot(qv, qv)))
+    def dot(a: AnyRef, b: AnyRef): Double =
+      VecKernels.dot(a.asInstanceOf[Array[Float]], b.asInstanceOf[Array[Float]])
+    def read(r: Row, i: Int): AnyRef = r.getSeq[Float](i).toArray
+    def dotCol(a: Column, b: Column): Column = VectorOps.dot(a, b)
+    def entryNrm: Column = VectorOps.norm(col("nv"))
+  }
+
+  private[graft] object Int8Cos extends WalkScorer("dq", "dn8", "nq", 8, ArrayType(LongType, false)) {
+    def query(qv: Array[Float]): (AnyRef, Double) = {
+      val q8 = VecKernels.quantize(qv)
+      (q8, math.sqrt(VecKernels.lvecDot(q8, q8).toDouble))
+    }
+    def dot(a: AnyRef, b: AnyRef): Double =
+      VecKernels.lvecDot(a.asInstanceOf[Array[Long]], b.asInstanceOf[Array[Long]]).toDouble
+    def read(r: Row, i: Int): AnyRef = r.getSeq[Long](i).toArray
+    def dotCol(a: Column, b: Column): Column = call_function("lvec_dot", a, b).cast("double")
+    def entryNrm: Column = col("nn8")
+  }
+
+  private[graft] final case class WalkQuery(id: Long, vec: AnyRef, nrm: Double)
+
+  /** The metadata filter of a filtered walk: pmod(label or id, mod) ==
+    * res, over the corpus under `dir` (the adaptive ef's statistics and
+    * the arrival lookup read it).
+    */
+  private final case class WalkFilter(dir: String, byId: Boolean, mod: Long, res: Long) {
+    /** Spark's pmod, so negative labels and moduli match the column. */
+    def pass(node: Long, label: java.lang.Long): Boolean = {
+      if (!byId && label == null) false
+      else {
+        val r = (if (byId) node else label.longValue) % mod
+        (if (r < 0) (r + mod) % mod else r) == res
+      }
+    }
+    def column(id: Column, label: Column): Column =
+      pmod((if (byId) id else label).cast("long"), lit(mod)) === lit(res)
+    /** The bounded corpus lookup: which of `nodes` pass the filter. */
+    def lookup(s: SparkSession, nodes: Seq[Long]): Set[Long] = {
+      import s.implicits._
+      Graft.embeddings(s, dir).select(col("vec_id").as("node"), col("label").as("nlabel"))
+        .join(broadcast(nodes.distinct.toDF("node")), "node")
+        .filter(column(col("node"), col("nlabel")))
+        .select(col("node")).collect().map(_.getLong(0)).toSet
+    }
+  }
+
+  /** A candidate a walk scored: (q_id, node, score, passes the filter). */
+  private type Cand = (Long, Long, Double, Boolean)
+
+  /** Where a driver-ranked walk reads entry points and neighbours. Both
+    * sources score with the walk's [[WalkScorer]] and return the same
+    * candidates; they differ only in where the work runs.
+    */
+  private sealed trait WalkSource {
+    /** Every entry node scored against every query (node ≠ q_id); the
+      * pass flag is computed when `f` is given.
+      */
+    def entry(qs: Seq[WalkQuery], f: Option[WalkFilter]): Seq[Cand]
+    /** The frontier's neighbours in `layer`, scored (dst ≠ q_id). */
+    def expand(layer: Long, frontier: Seq[(WalkQuery, Long)], f: Option[WalkFilter]): Seq[Cand]
+    /** The nodes among `nodes` that pass `f`. */
+    def passing(nodes: Seq[Long], f: WalkFilter): Set[Long]
+  }
+
+  /** The Spark-probe source: one broadcast-join probe job of the index
+    * frame per round, entry scoring and the arrival lookup as jobs. It
+    * serves an index whose snapshot would not fit the driver, and is
+    * the reference the snapshot source is spec-checked against.
+    */
+  private final class ProbeSource(s: SparkSession, adj: DataFrame, entryNodes: DataFrame,
+                                  sc: WalkScorer) extends WalkSource {
+    private def passCol(f: Option[WalkFilter], id: Column, label: Column): Column =
+      f.fold(lit(false))(_.column(id, label)).as("pass")
+
+    private def frame(rows: Seq[Row], withNode: Boolean): DataFrame = {
+      val fields = Seq(StructField("q_id", LongType, false)) ++
+        (if (withNode) Seq(StructField("node", LongType, false)) else Nil) ++
+        Seq(StructField("qv", sc.qType, false), StructField("qnrm", DoubleType, false))
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+    }
+
+    private def cands(df: DataFrame): Seq[Cand] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSeq
+
+    def entry(qs: Seq[WalkQuery], f: Option[WalkFilter]): Seq[Cand] = {
+      val qsDf = frame(qs.map(q => Row(q.id, q.vec, q.nrm)), withNode = false)
+      cands(entryNodes.crossJoin(broadcast(qsDf))
+        .filter(col("node") =!= col("q_id"))
+        .select(col("q_id"), col("node"), sc.scoreCol(col(sc.entryVec), sc.entryNrm).as("score"),
+          passCol(f, col("node"), col("nlabel"))))
+    }
+
+    def expand(layer: Long, frontier: Seq[(WalkQuery, Long)], f: Option[WalkFilter]): Seq[Cand] = {
+      val stDf = frame(frontier.map { case (q, n) => Row(q.id, n, q.vec, q.nrm) }, withNode = true)
+      val idx = if (adj.columns.contains("layer")) adj.filter(col("layer") === layer) else adj
+      cands(idx.join(broadcast(stDf), col("src") === col("node"))
+        .filter(col("dst") =!= col("q_id"))
+        .select(col("q_id"), col("dst"), sc.scoreCol(col(sc.vec), col(sc.nrm)).as("score"),
+          passCol(f, col("dst"), col("dlabel"))))
+    }
+
+    def passing(nodes: Seq[Long], f: WalkFilter): Set[Long] = f.lookup(s, nodes)
+  }
+
+  /** Nodes held on the driver: id, scoring vector, norm, label (null
+    * when the frame carries none).
+    */
+  private final class NodeRows(val ids: Array[Long], val vecs: Array[AnyRef],
+                               val nrms: Array[Double], val labels: Array[java.lang.Long])
+    extends Serializable
+
+  /** Builds [[NodeRows]], keeping the first row of each id; `pos` maps
+    * an id to its position.
+    */
+  private final class NodeRowsBuilder {
+    val pos = scala.collection.mutable.LongMap.empty[Int]
+    private val ids = Array.newBuilder[Long]; private val vecs = Array.newBuilder[AnyRef]
+    private val nrms = Array.newBuilder[Double]
+    private val labels = Array.newBuilder[java.lang.Long]
+    def add(id: Long, vec: => AnyRef, nrm: Double, label: java.lang.Long): Unit =
+      if (!pos.contains(id)) {
+        pos(id) = pos.size
+        ids += id; vecs += vec; nrms += nrm; labels += label
+      }
+    def result(): NodeRows = new NodeRows(ids.result(), vecs.result(), nrms.result(), labels.result())
+  }
+
+  /** Per-layer CSR adjacency over [[NodeRows]] positions. */
+  private final class Csr(val off: Array[Int], val nbr: Array[Int])
+
+  /** A driver-resident copy of one loaded serving index: one row per
+    * node (vector, norm, label payload) and a CSR adjacency per layer
+    * (the flat index is layer 0).
+    */
+  private final class IndexSnapshot(val nodes: NodeRows,
+                                    val pos: scala.collection.mutable.LongMap[Int],
+                                    val layers: Map[Long, Csr])
+
+  /** The in-process source over a snapshot of the index frame and of
+    * its entry set: no Spark job per round. A node the index payload
+    * does not carry (an entry node no edge reaches) keeps the bounded
+    * corpus lookup of the probe source.
+    */
+  private final class SnapshotSource(s: SparkSession, idx: IndexSnapshot, entrySet: NodeRows,
+                                     sc: WalkScorer) extends WalkSource {
+    def entry(qs: Seq[WalkQuery], f: Option[WalkFilter]): Seq[Cand] =
+      for (q <- qs; i <- entrySet.ids.indices if entrySet.ids(i) != q.id) yield {
+        val n = entrySet.ids(i)
+        (q.id, n, sc.score(entrySet.vecs(i), entrySet.nrms(i), q),
+          f.exists(_.pass(n, entrySet.labels(i))))
+      }
+
+    def expand(layer: Long, frontier: Seq[(WalkQuery, Long)], f: Option[WalkFilter]): Seq[Cand] = {
+      val nodes = idx.nodes
+      idx.layers.get(layer).fold(Seq.empty[Cand]) { g =>
+        val out = Seq.newBuilder[Cand]
+        frontier.foreach { case (q, n) =>
+          idx.pos.get(n).foreach { i =>
+            var e = g.off(i)
+            while (e < g.off(i + 1)) {
+              val j = g.nbr(e)
+              val d = nodes.ids(j)
+              if (d != q.id)
+                out += ((q.id, d, sc.score(nodes.vecs(j), nodes.nrms(j), q),
+                  f.exists(_.pass(d, nodes.labels(j)))))
+              e += 1
+            }
+          }
+        }
+        out.result()
+      }
+    }
+
+    def passing(nodes: Seq[Long], f: WalkFilter): Set[Long] = {
+      def label(n: Long): java.lang.Long =
+        idx.pos.get(n).map(idx.nodes.labels(_)).orNull
+      val (known, absent) =
+        if (f.byId) (nodes, Nil) else nodes.partition(n => label(n) != null)
+      known.filter(n => f.pass(n, label(n))).toSet ++
+        (if (absent.isEmpty) Set.empty[Long] else f.lookup(s, absent))
+    }
+  }
+
+  /** Driver memory one index snapshot may take: an eighth of the heap,
+    * so a few loaded generations fit beside the collect that builds
+    * each one.
+    */
+  private def snapshotBudgetBytes: Long = Runtime.getRuntime.maxMemory / 8
+
+  /** Snapshots built so far (the per-key latch makes this one per
+    * index frame however many walks race on it).
+    */
+  private[graft] val snapshotBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A value built once under its own monitor — the per-key latch of the
+    * snapshot memo. The thunk is dropped after the build so the value
+    * never pins the frame it was built from.
+    */
+  private final class Once(private var thunk: () => AnyRef) {
+    private var v: AnyRef = _
+    def get: AnyRef = synchronized {
+      if (thunk != null) { v = thunk(); thunk = null }
+      v
+    }
+  }
+
+  /** Snapshots keyed by the IDENTITY of the frame they copy: a
+    * republished generation is a new frame and never reads an old
+    * snapshot, and a frame nothing references any more drops its entry.
+    * The registry lock is held only to find or insert a key's latch;
+    * the collect runs under the latch alone.
+    */
+  private val snapshots = new java.util.WeakHashMap[DataFrame, Once]()
+  Graft.onRelease(() => snapshots.synchronized(snapshots.clear()))
+
+  private def memoByFrame[T <: AnyRef](df: DataFrame)(build: => T): T = {
+    val once = snapshots.synchronized {
+      Option(snapshots.get(df)).getOrElse {
+        val o = new Once(() => build)
+        snapshots.put(df, o)
+        o
+      }
+    }
+    once.get.asInstanceOf[T]
+  }
+
+  private def labelCol(df: DataFrame, name: String): Column =
+    if (df.columns.contains(name)) col(name).cast("long") else lit(null).cast("long")
+
+  /** The snapshot of an index frame (layer, src, dst, vector, norm[,
+    * dlabel]), or None when it would not fit [[snapshotBudgetBytes]]:
+    * one aggregate sizes the frame, one collect copies it — each
+    * partition compacted on its executor to edge triples plus one
+    * payload per distinct destination.
+    */
+  private def indexSnapshot(adj: DataFrame, sc: WalkScorer): Option[IndexSnapshot] =
+    memoByFrame(adj) {
+      snapshotBuilds.incrementAndGet()
+      val frame = adj.select(
+        if (adj.columns.contains("layer")) col("layer").cast("long") else lit(0L),
+        col("src"), col("dst"), col(sc.vec), col(sc.nrm), labelCol(adj, "dlabel"))
+      val stats = frame.agg(count(lit(1)), max(size(col(sc.vec)))).head()
+      val width = if (stats.isNullAt(1)) 0L else stats.getInt(1).toLong
+      // per row: an edge triple and at most one (id, vector, norm, label)
+      if (stats.getLong(0) * (56L + width * sc.elemBytes) > snapshotBudgetBytes) None
+      else {
+        val chunks = frame.rdd.mapPartitions { it =>
+          val edges = Array.newBuilder[Long]
+          val nodes = new NodeRowsBuilder
+          it.foreach { r =>
+            edges += r.getLong(0); edges += r.getLong(1); edges += r.getLong(2)
+            nodes.add(r.getLong(2), sc.read(r, 3), r.getDouble(4),
+              if (r.isNullAt(5)) null else r.getLong(5))
+          }
+          Iterator((edges.result(), nodes.result()))
+        }.collect()
+        val nodes = new NodeRowsBuilder
+        chunks.foreach { case (_, c) =>
+          c.ids.indices.foreach(i => nodes.add(c.ids(i), c.vecs(i), c.nrms(i), c.labels(i)))
+        }
+        val edges = Array.concat(chunks.map(_._1): _*)
+        val ne = edges.length / 3
+        // a source that is nobody's destination (a one-way frame) still
+        // needs a position; it is never scored, so it carries no payload
+        (0 until ne).foreach(e => nodes.add(edges(3 * e + 1), null, 0.0, null))
+        val n = nodes.pos.size
+        val layers = (0 until ne).groupBy(e => edges(3 * e)).map { case (layer, es) =>
+          val off = new Array[Int](n + 1)
+          es.foreach(e => off(nodes.pos(edges(3 * e + 1)) + 1) += 1)
+          for (i <- 0 until n) off(i + 1) += off(i)
+          val fill = off.clone()
+          val nbr = new Array[Int](es.size)
+          es.foreach { e =>
+            val i = nodes.pos(edges(3 * e + 1))
+            nbr(fill(i)) = nodes.pos(edges(3 * e + 2))
+            fill(i) += 1
+          }
+          layer -> new Csr(off, nbr)
+        }
+        Some(new IndexSnapshot(nodes.result(), nodes.pos, layers))
+      }
+    }
+
+  /** The snapshot of an entry set (node, nv | nq, nn8[, nlabel]). */
+  private def entrySnapshot(entryNodes: DataFrame, sc: WalkScorer): NodeRows =
+    memoByFrame(entryNodes) {
+      val rows = entryNodes.select(col("node"), col(sc.entryVec), sc.entryNrm,
+        labelCol(entryNodes, "nlabel")).collect()
+      new NodeRows(rows.map(_.getLong(0)), rows.map(sc.read(_, 1)), rows.map(_.getDouble(2)),
+        rows.map(r => if (r.isNullAt(3)) null else java.lang.Long.valueOf(r.getLong(3))))
+    }
+
+  /** Per-query (score desc, node) cut of pooled candidates — the one
+    * beam/accumulator cut of every driver-ranked walk. Score is a pure
+    * function of (q_id, node), so the distinct collapses re-discovered
+    * nodes exactly.
+    */
+  private def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
+    rows.groupBy(_._1).map { case (q, rs) =>
+      q -> rs.map(r => (r._2, r._3)).toSeq.distinct
+        .sortBy { case (n, sc) => (-sc, n) }.take(cut)
+    }
+
+  /** THE driver-ranked walk: beam state lives on the driver, bounded by
+    * the query batch (Q·beam rows — the serving request's working set,
+    * never the corpus). Entry and strategy:
+    *
+    *  - flat (`descent` = None): every entry node is scored, each query
+    *    starts at its best; a filtered walk seeds its result
+    *    accumulator with the passing entry nodes;
+    *  - layered (`descent` = Some(maxLevel)): the same start over the
+    *    top layer's nodes, then [[HnswDescentRounds]] greedy rounds per
+    *    layer maxLevel..1 (state of 1); a filtered walk seeds its
+    *    accumulator with the descent's arrival node where it passes.
+    *
+    * Then up to `rounds` base-layer rounds: expand the frontier one hop,
+    * keep the per-query top `beam` (the adaptive ef when filtered) and,
+    * when filtered, the top-k passing nodes ever scored. A round that
+    * leaves every state unchanged proves the remaining rounds of that
+    * phase are no-ops (the scored set is a pure function of the
+    * frontier), so they are skipped — exact.
+    *
+    * The neighbour source is the snapshot of the index frame unless it
+    * would not fit the driver, or `probe` forces the Spark-probe
+    * source; both compute the same rows.
+    */
+  private def driverWalk(s: SparkSession, adj: DataFrame, entryNodes: DataFrame, sc: WalkScorer,
+                         queries: Array[Row], k: Int, beam: Int, rounds: Int,
+                         descent: Option[Long] = None, filter: Option[WalkFilter] = None,
+                         probe: Boolean = false): DataFrame = {
+    import s.implicits._
+    val cut = filter.fold(beam) { f =>
+      adaptiveEf(beam, Graft.tableRows(s, f.dir, "embeddings"),
+        filterPassCount(s, f.dir, f.byId, f.mod, f.res))
+    }
+    val src: WalkSource = (if (probe) None else indexSnapshot(adj, sc))
+      .map(idx => new SnapshotSource(s, idx, entrySnapshot(entryNodes, sc), sc))
+      .getOrElse(new ProbeSource(s, adj, entryNodes, sc))
+    val qs = queries.map { r =>
+      val (v, n) = sc.query(r.getSeq[Float](1).toArray)
+      WalkQuery(r.getLong(0), v, n)
+    }.toSeq
+    val byQ = qs.map(q => q.id -> q).toMap
+    def pooled(m: Map[Long, Seq[(Long, Double)]]) =
+      m.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) }
+    def scored(cs: Seq[Cand]) = cs.map(c => (c._1, c._2, c._3))
+
+    val seedRes = filter.isDefined && descent.isEmpty
+    val entry = src.entry(qs, if (seedRes) filter else None)
+    var state = topPerQ(scored(entry), 1)
+    var res = if (seedRes) topPerQ(scored(entry.filter(_._4)), k) else Map.empty[Long, Seq[(Long, Double)]]
+    // one round; true when it left the state(s) unchanged
+    def step(layer: Long, width: Int, f: Option[WalkFilter]): Boolean = {
+      val frontier = state.toSeq.flatMap { case (q, ns) => ns.map(n => (byQ(q), n._1)) }
+      if (frontier.isEmpty) true
+      else {
+        val cs = src.expand(layer, frontier, f)
+        val next = topPerQ(pooled(state) ++ scored(cs), width)
+        val nextRes = if (f.isEmpty) res else topPerQ(pooled(res) ++ scored(cs.filter(_._4)), k)
+        val unchanged = next == state && nextRes == res
+        state = next
+        res = nextRes
+        unchanged
+      }
+    }
+    def phase(maxRounds: Int)(body: => Boolean): Unit = {
+      var r = 0
+      var converged = false
+      while (r < maxRounds && !converged) { r += 1; converged = body }
+    }
+    // layers above maxLevel are empty by construction, so skipping them
+    // equals the oracle's static OracleMaxLayer..1 descent over zero-row
+    // layer CTEs
+    descent.foreach { maxLevel =>
+      for (l <- maxLevel to 1L by -1L) phase(HnswDescentRounds)(step(l, 1, None))
+      filter.foreach { f =>
+        val arrivals = pooled(state)
+        val pass = if (arrivals.isEmpty) Set.empty[Long] else src.passing(arrivals.map(_._2), f)
+        res = topPerQ(arrivals.filter(a => pass(a._2)), k)
+      }
+    }
+    phase(rounds)(step(0L, cut, filter))
+    (if (filter.isDefined) res else state).toSeq.flatMap { case (q, ns) =>
+      ns.take(k).zipWithIndex.map { case ((n, score), i) => (q, (i + 1).toLong, n, score) }
+    }.sortBy(r => (r._1, r._2)).toDF("q_id", "rn", "vec_id", "score")
+  }
+
+  /** The keyed flat walks' √N entry set (node, nv, nlabel): the graph's
+    * navigable coarse layer, with the filterable payload.
+    */
+  private def flatEntrySet(s: SparkSession, dir: String): DataFrame =
+    Graft.embeddings(s, dir)
+      .filter(col("vec_id") < sqrtFanout(Graft.tableRows(s, dir, "embeddings")))
+      .select(col("vec_id").as("node"), col("embedding").as("nv"), col("label").as("nlabel"))
 
   /** The shared beam core of [[graphSearch]] and [[graphSearchFromGen]]:
     * entry scoring over `cents` (node, nv), then `rounds` synchronized
     * beam expansions over the prepared serving index `undE`
     * (src, dst, dv, dnrm) — the two callers differ ONLY in where the
     * index frame comes from (session memo vs a written generation).
-    * Routes by query-batch size: at or below [[GraphSearchDistQ]] the
-    * beam state is driver-ranked (bounded by the keyed request), above
-    * it the rounds run distributed ([[beamSearchRoundsDist]]) so a
-    * production batch never pulls Q·ef·2k rows through the driver.
-    * Both paths compute identical values (same scoring expression, same
-    * (score desc, node) total order, same distinct-then-cut rounds) —
-    * spec-asserted equal in AnnGraphSpec.
+    * The keyed query batch is statically bounded (limit
+    * GraphSearchQueryCount = 20 < GraphSearchDistQ), so it takes the
+    * driver-ranked walk without a routing probe.
     */
   private def beamSearchOver(s: SparkSession, undE: DataFrame, cents: DataFrame,
                              dir: String, k: Int, beam: Int, rounds: Int): DataFrame =
-    // the keyed query batch is statically bounded (limit
-    // GraphSearchQueryCount = 20 < GraphSearchDistQ), so the driver
-    // path is picked without paying a count job per request
-    beamSearchRoundsDriver(s, undE, cents, graphSearchQueries(s, dir), k, beam, rounds)
+    driverWalk(s, undE, cents, FloatCos, queryRows(graphSearchQueries(s, dir)), k, beam, rounds)
 
   /** Routed entry for EXPLICIT query batches (batch-serving jobs, the
-    * large-Q probe, the parity spec): counts the request — free
-    * relative to the walk — and picks the execution shape.
+    * large-Q probe, the parity spec): at or below `distThreshold` the
+    * driver-ranked walk, above it [[beamSearchRoundsDist]]. Both paths
+    * compute identical values (same scoring, same (score desc, node)
+    * total order, same distinct-then-cut rounds) — spec-asserted in
+    * Round15OpsSpec. `probe` forces the Spark-probe neighbour source.
     */
   private[graft] def beamSearchBatch(s: SparkSession, undE: DataFrame, cents: DataFrame,
                                      queries: DataFrame, k: Int, beam: Int, rounds: Int,
-                                     distThreshold: Int = GraphSearchDistQ): DataFrame = {
-    if (exceedsQ(queries, distThreshold))
-      beamSearchRoundsDist(s, undE, cents, queries, k, beam, rounds)
-    else
-      beamSearchRoundsDriver(s, undE, cents, queries, k, beam, rounds)
-  }
-
-  /** Driver-ranked beam rounds — the small-Q path (see
-    * [[GraphSearchDistQ]]): beam state lives on the driver, bounded by
-    * the query batch; scoring and index probes stay distributed.
-    */
-  private def beamSearchRoundsDriver(s: SparkSession, undE: DataFrame, cents: DataFrame,
-                                     queries: DataFrame, k: Int, beam: Int, rounds: Int): DataFrame = {
-    import s.implicits._
-    // query batch with norms, held on the driver (Q rows — the serving
-    // request): the per-round frontier ships (q_id, node, qv, qnrm) so
-    // the probe's scoring is inline in the join projection
-    val qrows = withNorm(queries
-        .select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
-    // BEAM STATE LIVES ON THE DRIVER — bounded by the QUERY BATCH
-    // (Q·beam rows; the serving request's working set), never the
-    // corpus: the knnJoin broadcast-batch asymmetry extended to
-    // kcenter's collect-per-round pattern. Scoring and index probing
-    // stay distributed (one job per round: index ⋈ broadcast(frontier),
-    // zero shuffles); only the ≤ Q·beam·2k scored candidates come back
-    // for the driver-side dedup + top-beam cut. The r14-initial
-    // all-Spark formulation (per-round distinct + window +
-    // localCheckpoint) measured 2s/round of pure exchange/job overhead
-    // at ANY corpus size — 16s for a 20-query batch; this shape is the
-    // same semantics at a fraction of it.
-    def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
-      rows.groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).toSeq.distinct
-          .sortBy { case (n, sc) => (-sc, n) }.take(cut)
-      }
-    val qsDf = qrows.toSeq.toDF("q_id", "qv", "qnrm")
-    val entry = cents.crossJoin(broadcast(qsDf))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    var state: Map[Long, Seq[(Long, Double)]] = topPerQ(entry, 1)
-    val qv = qrows.map(q => q._1 -> (q._2, q._3)).toMap
-    // FIXED-POINT EARLY EXIT (r20 opt): the scored set is a pure
-    // function of the frontier (deterministic cosine over a static
-    // index), so a round that leaves the beam state unchanged proves
-    // every remaining round is a no-op — skip them. Exact: the final
-    // state is bit-identical to running all `rounds` rounds; only the
-    // per-round probe JOBS are saved (measured: the beam converges by
-    // round 4-6 of 8 at sf0.1, and each skipped round is one collect
-    // job of ~60-100 ms fixed latency).
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val frontier = state.toSeq.flatMap { case (q, ns) =>
-        ns.map(n => (q, n._1, qv(q)._1, qv(q)._2))
-      }
-      val stDf = frontier.toDF("q_id", "node", "qv", "qnrm")
-      val scored = undE.join(broadcast(stDf), col("src") === col("node"))
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst"),
-          round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-            .as("score"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      // score is a pure function of (q_id, node), so the driver-side
-      // distinct collapses re-discovered nodes exactly
-      val pooled = state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++ scored
-      val next = topPerQ(pooled, beam)
-      converged = next == state
-      state = next
+                                     distThreshold: Int = GraphSearchDistQ,
+                                     probe: Boolean = false): DataFrame =
+    driverQueries(queries, distThreshold) match {
+      case Some(qs) => driverWalk(s, undE, cents, FloatCos, qs, k, beam, rounds, probe = probe)
+      case None => beamSearchRoundsDist(s, undE, cents, queries, k, beam, rounds)
     }
-    val out = state.toSeq.flatMap { case (q, ns) =>
-      ns.take(k).zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
-    }.sortBy(r => (r._1, r._2))
-    out.toDF("q_id", "rn", "vec_id", "score")
-  }
 
   /** Fully distributed beam rounds — the large-Q path: beam state is a
     * (q_id, node, score) frame of Q·beam rows that NEVER visits the
@@ -2849,7 +3196,7 @@ object Ann {
 
   /** One distributed beam-state round: (state ∪ scored) → distinct →
     * per-query (score desc, node) top-`cut` — the exact frame twin of
-    * the driver paths' `topPerQ` (score is a pure function of
+    * the driver walk's `topPerQ` (score is a pure function of
     * (q_id, node), so the frame distinct collapses re-discovered nodes
     * identically), with an eager localCheckpoint cutting the per-round
     * lineage. Shared by every distributed walk variant (flat uses its
@@ -2912,15 +3259,11 @@ object Ann {
       // the entry set ships its filterable payload (nlabel) next to the
       // vectors — the adjacency already carries dlabel — so the FILTERED
       // walk serves off the same generation (qdrant payload-storage shape)
-      Graft.embeddings(s, dir)
-        .filter(col("vec_id") < sqrtFanout(Graft.tableRows(s, dir, "embeddings")))
-        .select(col("vec_id").as("node"), col("embedding").as("nv"),
-          col("label").as("nlabel"))
-        .write.mode("overwrite").parquet(s"$out/entry")
+      flatEntrySet(s, dir).write.mode("overwrite").parquet(s"$out/entry")
       // the serving tier LOADS the artifact once: persist the read-back
-      // frames so the per-round probes hit RAM, not a repeated parquet
-      // scan (9+ probe jobs per query batch; at 100x the adjacency is
-      // GBs per scan) — spill-safe via the default MEMORY_AND_DISK, and
+      // frames so the snapshot build and any probed rounds hit RAM, not
+      // a repeated parquet scan (at 100x the adjacency is GBs per
+      // scan) — spill-safe via the default MEMORY_AND_DISK, and
       // registered with the cache registry so releaseCaches() frees the
       // blocks (the onRelease hook above clears the memo map in step)
       val adj = s.read.parquet(s"$out/adjacency").persist()
@@ -2948,11 +3291,7 @@ object Ann {
       val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
       val out = s"${Graft.artifactRoot}/graft_dedup_gen/$safe"
       dedupedSearchIndex(s, dir).write.mode("overwrite").parquet(s"$out/adjacency")
-      Graft.embeddings(s, dir)
-        .filter(col("vec_id") < sqrtFanout(Graft.tableRows(s, dir, "embeddings")))
-        .select(col("vec_id").as("node"), col("embedding").as("nv"),
-          col("label").as("nlabel"))
-        .write.mode("overwrite").parquet(s"$out/entry")
+      flatEntrySet(s, dir).write.mode("overwrite").parquet(s"$out/entry")
       val adj = s.read.parquet(s"$out/adjacency").persist()
       val entry = s.read.parquet(s"$out/entry").persist()
       Graft.trackCaches(s"written_dedup_gen_$safe", adj, entry)
@@ -2997,8 +3336,12 @@ object Ann {
     })
   }
 
-  private val writtenHnswDedupGens =
-    scala.collection.mutable.Map.empty[String, (DataFrame, DataFrame)]
+  /** A loaded layered deduped generation: the artifact frames plus the
+    * walk's entry nodes and top level, derived once at load.
+    */
+  private final case class HnswDedupGen(adj: DataFrame, entry: DataFrame,
+                                        entryNodes: DataFrame, maxLevel: Long)
+  private val writtenHnswDedupGens = scala.collection.mutable.Map.empty[String, HnswDedupGen]
   Graft.onRelease(() => writtenHnswDedupGens.clear())
 
   /** Session-memoized WRITTEN generation of the DEDUP-GATED LAYERED
@@ -3009,7 +3352,12 @@ object Ann {
     * vec_id function (it is the top SURVIVOR level, a product of the
     * collapse), so a self-contained artifact must ship it.
     */
-  def writtenHnswDedupedGen(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  def writtenHnswDedupedGen(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val g = hnswDedupGen(s, dir)
+    (g.adj, g.entry)
+  }
+
+  private def hnswDedupGen(s: SparkSession, dir: String): HnswDedupGen =
     synchronized {
       writtenHnswDedupGens.getOrElseUpdate(dir, {
         val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
@@ -3028,7 +3376,7 @@ object Ann {
         val adj = s.read.parquet(s"$out/adjacency").persist()
         val entry = s.read.parquet(s"$out/entry").persist()
         Graft.trackCaches(s"written_hnsw_dedup_gen_$safe", adj, entry)
-        (adj, entry)
+        HnswDedupGen(adj, entry, entry.select(col("node"), col("nv")), maxLevel)
       })
     }
 
@@ -3063,11 +3411,9 @@ object Ann {
   def hnswSearchDedupedFromGen(s: SparkSession, dir: String, k: Int = GraphSearchK,
                                beam: Int = GraphSearchBeam,
                                rounds: Int = GraphSearchRounds): DataFrame = {
-    val (adj, entry) = writtenHnswDedupedGen(s, dir)
-    val mlRow = entry.agg(max(col("level")).as("ml")).collect().head
-    val maxLevel = if (mlRow.isNullAt(0)) 0L else mlRow.getLong(0)
-    hnswWalkDriverOver(s, adj, entry.select(col("node"), col("nv")), maxLevel,
-      graphSearchQueries(s, dir), k, beam, rounds)
+    val g = hnswDedupGen(s, dir)
+    hnswWalkDriverOver(s, g.adj, g.entryNodes, g.maxLevel, graphSearchQueries(s, dir),
+      k, beam, rounds)
   }
 
   private val writtenInt8Gens =
@@ -3081,7 +3427,7 @@ object Ann {
     * publishes the adjacency with int8 codes + integer-exact norms
     * (src, dst, dq, dn8) and the quantized √N entry set (node, nq,
     * nn8) as parquet once; every later consumer LOADS those artifacts
-    * (persisted read-back so the per-round probes hit RAM). The float
+    * (persisted read-back, so re-reads hit RAM). The float
     * vectors never enter the artifact — the whole point of shipping
     * the quantized generation.
     */
@@ -3222,7 +3568,8 @@ object Ann {
   def hnswSearchFromGen(s: SparkSession, dir: String, k: Int = GraphSearchK,
                         beam: Int = GraphSearchBeam,
                         rounds: Int = GraphSearchRounds): DataFrame =
-    hnswWalkDriver(s, dir, writtenHnswGen(s, dir), graphSearchQueries(s, dir), k, beam, rounds)
+    hnswWalkDriver(s, dir, writtenHnswGen(s, dir), queryRows(graphSearchQueries(s, dir)),
+      k, beam, rounds)
 
   /** The FILTERED layered walk run OFF THE WRITTEN INDEX GENERATION —
     * completes the serving matrix (all five walks × {live, written}):
@@ -3408,34 +3755,35 @@ object Ann {
   private[graft] def graphSearchFilteredWalk(s: SparkSession, dir: String, k: Int,
                                              beam: Int, rounds: Int, byId: Boolean,
                                              fMod: Long, fRes: Long): DataFrame =
-    graphSearchFilteredWalkDriver(s, dir, graphSearchQueries(s, dir),
-      k, beam, rounds, byId, fMod, fRes)
+    graphSearchFilteredDriverOver(s, dir, graphSearchIndex(s, dir), flatEntrySet(s, dir),
+      graphSearchQueries(s, dir), k, beam, rounds, byId, fMod, fRes)
 
   /** Routed entry for EXPLICIT query batches through the FILTERED walk
     * — [[beamSearchBatch]]'s dispatch applied to the dual-state
     * variant: at or below `distThreshold` the two per-query states
     * live on the driver (bounded by the request), above it the rounds
-    * run as Spark jobs ([[graphSearchFilteredRoundsDist]]) so a
-    * production batch never funnels Q·ef·2k scored rows through the
-    * driver. Values identical on both paths (same scoring expression,
-    * same adaptive ef, same (score desc, node) total order) —
-    * spec-asserted in Round16OpsSpec.
+    * run as Spark jobs ([[graphSearchFilteredRoundsDist]]). Values
+    * identical on both paths (same scoring expression, same adaptive
+    * ef, same (score desc, node) total order) — spec-asserted in
+    * Round16OpsSpec.
     */
   private[graft] def graphSearchFilteredBatch(s: SparkSession, dir: String, queries: DataFrame,
                                               k: Int, beam: Int, rounds: Int, byId: Boolean,
                                               fMod: Long, fRes: Long,
-                                              distThreshold: Int = GraphSearchDistQ): DataFrame =
-    if (exceedsQ(queries, distThreshold))
-      graphSearchFilteredRoundsDist(s, dir, queries, k, beam, rounds, byId, fMod, fRes)
-    else
-      graphSearchFilteredWalkDriver(s, dir, queries, k, beam, rounds, byId, fMod, fRes)
+                                              distThreshold: Int = GraphSearchDistQ,
+                                              probe: Boolean = false): DataFrame =
+    driverQueries(queries, distThreshold) match {
+      case Some(qs) => driverWalk(s, graphSearchIndex(s, dir), flatEntrySet(s, dir), FloatCos, qs,
+        k, beam, rounds, filter = Some(WalkFilter(dir, byId, fMod, fRes)), probe = probe)
+      case None => graphSearchFilteredRoundsDist(s, dir, queries, k, beam, rounds, byId, fMod, fRes)
+    }
 
   /** Fully distributed filtered rounds — the large-Q path: BOTH
     * per-query states (navigation beam at adaptive ef, filter-passing
     * result accumulator at k) are (q_id, node, score) frames that never
     * visit the driver. Each round scores the frontier's neighborhood
     * ONCE (pass flag riding the projection) and feeds both cuts — the
-    * same one-probe-per-round shape as the driver walk, so per-round
+    * same one-scoring-per-round shape as the driver walk, so per-round
     * cost is Q·ef·2k score kernels + bounded-frame exchanges,
     * independent of corpus size.
     */
@@ -3451,10 +3799,7 @@ object Ann {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val idx = graphSearchIndex(s, dir).repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = Graft.embeddings(s, dir)
-      .filter(col("vec_id") < sqrtFanout(nTot))
-      .select(col("vec_id").as("node"), col("embedding").as("nv"), col("label").as("nlabel"))
-    val entry = qn.crossJoin(cents)
+    val entry = qn.crossJoin(flatEntrySet(s, dir))
       .filter(col("node") =!= col("q_id"))
       .select(col("q_id"), col("node"),
         round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
@@ -3491,94 +3836,19 @@ object Ann {
     distFinal(res, k)
   }
 
-  /** The driver-ranked filtered walk core over an explicit query batch
-    * (see [[graphSearchFilteredWalk]] for semantics), reading the LIVE
-    * memoized index; [[graphSearchFilteredDriverOver]] is the same core
-    * over caller-supplied index frames (the written-generation path).
+  /** The filtered walk over CALLER-SUPPLIED index frames: `undE` = the
+    * undirected adjacency with payload (src, dst, dv, dnrm, dlabel) and
+    * `cents` = the √N entry set with its filterable payload (node, nv,
+    * nlabel) — the shapes [[writtenGraphGen]] publishes. Corpus
+    * statistics (row count, filter pass count) still come from `dir`:
+    * a serving tier ships them as index metadata next to the artifact.
     */
-  private def graphSearchFilteredWalkDriver(s: SparkSession, dir: String, queries: DataFrame,
-                                            k: Int, beam: Int, rounds: Int, byId: Boolean,
-                                            fMod: Long, fRes: Long): DataFrame = {
-    val cents = Graft.embeddings(s, dir)
-      .filter(col("vec_id") < sqrtFanout(Graft.tableRows(s, dir, "embeddings")))
-      .select(col("vec_id").as("node"), col("embedding").as("nv"), col("label").as("nlabel"))
-    graphSearchFilteredDriverOver(s, dir, graphSearchIndex(s, dir), cents,
-      queries, k, beam, rounds, byId, fMod, fRes)
-  }
-
-  /** The filtered walk core over CALLER-SUPPLIED index frames:
-    * `undE` = the undirected adjacency with payload (src, dst, dv,
-    * dnrm, dlabel) and `cents` = the √N entry set with its filterable
-    * payload (node, nv, nlabel) — the shapes [[writtenGraphGen]]
-    * publishes. Corpus statistics (row count, filter pass count) still
-    * come from `dir`: a serving tier ships them as index metadata next
-    * to the artifact.
-    */
-  private def graphSearchFilteredDriverOver(s: SparkSession, dir: String, undE: DataFrame,
-                                            cents: DataFrame, queries: DataFrame,
-                                            k: Int, beam: Int, rounds: Int, byId: Boolean,
-                                            fMod: Long, fRes: Long): DataFrame = {
-    import s.implicits._
-    val nTot = Graft.tableRows(s, dir, "embeddings")
-    val nPass = filterPassCount(s, dir, byId, fMod, fRes)
-    val ef = adaptiveEf(beam, nTot, nPass)
-    val qrows = withNorm(queries
-        .select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
-    def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
-      rows.groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).toSeq.distinct
-          .sortBy { case (n, sc) => (-sc, n) }.take(cut)
-      }
-    def passCol(id: Column, label: Column): Column =
-      (pmod((if (byId) id else label).cast("long"), lit(fMod)) === lit(fRes)).as("pass")
-    // entry: each query scores the √N centroid layer once, the filter
-    // flag riding the same projection
-    val qsDf = qrows.toSeq.toDF("q_id", "qv", "qnrm")
-    val entry = cents.crossJoin(broadcast(qsDf))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"),
-        passCol(col("node"), col("nlabel")))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-    var state: Map[Long, Seq[(Long, Double)]] = topPerQ(entry.map(e => (e._1, e._2, e._3)), 1)
-    var res: Map[Long, Seq[(Long, Double)]] = topPerQ(entry.filter(_._4).map(e => (e._1, e._2, e._3)), k)
-    val qv = qrows.map(q => q._1 -> (q._2, q._3)).toMap
-    // fixed-point early exit (see beamSearchRoundsDriver): when neither
-    // the navigation beam nor the result accumulator changed, the next
-    // round's frontier — and therefore its scored set and both cuts —
-    // is identical; skipping the remaining rounds is exact.
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val frontier = state.toSeq.flatMap { case (q, ns) =>
-        ns.map(n => (q, n._1, qv(q)._1, qv(q)._2))
-      }
-      val stDf = frontier.toDF("q_id", "node", "qv", "qnrm")
-      val scored = undE.join(broadcast(stDf), col("src") === col("node"))
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst"),
-          round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-            .as("score"),
-          passCol(col("dst"), col("dlabel")))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      val pooled = state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++
-        scored.map(t => (t._1, t._2, t._3))
-      val nextState = topPerQ(pooled, ef)
-      val rpooled = res.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++
-        scored.filter(_._4).map(t => (t._1, t._2, t._3))
-      val nextRes = topPerQ(rpooled, k)
-      converged = nextState == state && nextRes == res
-      state = nextState
-      res = nextRes
-    }
-    val out = res.toSeq.flatMap { case (q, ns) =>
-      ns.take(k).zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
-    }.sortBy(r => (r._1, r._2))
-    out.toDF("q_id", "rn", "vec_id", "score")
-  }
+  private[graft] def graphSearchFilteredDriverOver(s: SparkSession, dir: String, undE: DataFrame,
+                                                   cents: DataFrame, queries: DataFrame,
+                                                   k: Int, beam: Int, rounds: Int, byId: Boolean,
+                                                   fMod: Long, fRes: Long): DataFrame =
+    driverWalk(s, undE, cents, FloatCos, queryRows(queries), k, beam, rounds,
+      filter = Some(WalkFilter(dir, byId, fMod, fRes)))
 
   /** Recall@k of the FILTERED graph search vs the exact top-k over the
     * passing subset — the number a filtered-ANN deployment actually
@@ -3658,8 +3928,9 @@ object Ann {
     * build stack, then one chained MATERIALIZED CTE per descent/beam
     * round. Scale shape: the layered index (≈ 8N/3 undirected edges,
     * memoized with destination vectors attached) is the serving tier's
-    * loaded structure; per round the probe is index ⋈ broadcast(Q·state)
-    * with scoring inline in the join projection — per-query cost
+    * loaded structure; each round scores the frontier's layer
+    * neighbours (in process over the index snapshot, or as a join
+    * per round on the distributed path) — per-query cost
     * O(ef·2k + Lmax·2k) score kernels, INDEPENDENT of N (vs
     * [[graphSearch]]'s Q×√N entry scan: at 10^12 vectors the √N entry
     * pass scores 10^6 centroids/query while the descent scores ~40·2k —
@@ -3680,8 +3951,9 @@ object Ann {
                                     memoKey: String, k: Int = GraphSearchK,
                                     beam: Int = GraphSearchBeam,
                                     rounds: Int = GraphSearchRounds): DataFrame =
-    // keyed batch is statically bounded — driver path, no count job
-    hnswSearchOverDriver(s, dir, edges, memoKey, graphSearchQueries(s, dir), k, beam, rounds)
+    // keyed batch is statically bounded — driver path, no routing probe
+    hnswWalkDriver(s, dir, layeredIndex(s, dir, edges, memoKey),
+      queryRows(graphSearchQueries(s, dir)), k, beam, rounds)
 
   /** The layered search index over an edge frame — per-layer undirected
     * adjacency with the destination's vector attached ONCE
@@ -3713,11 +3985,13 @@ object Ann {
                                      memoKey: String, queries: DataFrame,
                                      k: Int = GraphSearchK, beam: Int = GraphSearchBeam,
                                      rounds: Int = GraphSearchRounds,
-                                     distThreshold: Int = GraphSearchDistQ): DataFrame =
-    if (exceedsQ(queries, distThreshold))
-      hnswSearchRoundsDist(s, dir, edges, memoKey, queries, k, beam, rounds)
-    else
-      hnswSearchOverDriver(s, dir, edges, memoKey, queries, k, beam, rounds)
+                                     distThreshold: Int = GraphSearchDistQ,
+                                     probe: Boolean = false): DataFrame =
+    driverQueries(queries, distThreshold) match {
+      case Some(qs) =>
+        hnswWalkDriver(s, dir, layeredIndex(s, dir, edges, memoKey), qs, k, beam, rounds, probe)
+      case None => hnswSearchRoundsDist(s, dir, edges, memoKey, queries, k, beam, rounds)
+    }
 
   /** Fully distributed layered descent — the large-Q path: the 1-node
     * greedy state per upper layer and the layer-0 refine beam are
@@ -3787,109 +4061,33 @@ object Ann {
     distFinal(state, k)
   }
 
-  /** The driver-ranked layered walk core over an explicit query batch
-    * (see [[hnswSearch]] for semantics).
-    */
-  private def hnswSearchOverDriver(s: SparkSession, dir: String, edges: DataFrame,
-                                   memoKey: String, queries: DataFrame,
-                                   k: Int = GraphSearchK,
-                                   beam: Int = GraphSearchBeam,
-                                   rounds: Int = GraphSearchRounds): DataFrame =
-    hnswWalkDriver(s, dir, layeredIndex(s, dir, edges, memoKey), queries, k, beam, rounds)
-
   /** The driver-ranked layered walk over a PREPARED per-layer serving
-    * index (layer, src, dst, dv, dnrm) — split out so the live build
-    * ([[hnswSearchOverDriver]]) and the written-generation load
-    * ([[hnswSearchFromGen]]) share one walk, the flat walk's
-    * beamSearchOver factoring applied to the descent.
+    * index (layer, src, dst, dv, dnrm), entered at the corpus's top
+    * level — shared by the live build ([[hnswSearchOver]]) and the
+    * written-generation load ([[hnswSearchFromGen]]).
     */
   private def hnswWalkDriver(s: SparkSession, dir: String, undL: DataFrame,
-                             queries: DataFrame, k: Int, beam: Int,
-                             rounds: Int): DataFrame = {
+                             queries: Array[Row], k: Int, beam: Int, rounds: Int,
+                             probe: Boolean = false): DataFrame = {
     // entry: the top layer's node set is O(N·4^-Lmax) ≈ a handful —
     // session-memoized with the max level (hnswEntryState)
     val (entryNodes, maxLevel) = hnswEntryState(s, dir)
-    hnswWalkDriverOver(s, undL, entryNodes, maxLevel, queries, k, beam, rounds)
+    driverWalk(s, undL, entryNodes, FloatCos, queries, k, beam, rounds,
+      descent = Some(maxLevel), probe = probe)
   }
 
   /** The layered driver walk over fully EXPLICIT serving state — the
     * (layer, src, dst, dv, dnrm) adjacency, the top-layer entry node
     * set (node, nv) and its level — so a SELF-CONTAINED published
     * artifact ([[publishHnswGen]]: entry rows carry `level` = the top
-    * layer) serves the descent without any corpus access; the dir-based
-    * caller above derives the same state from the live corpus.
+    * layer) serves the descent without any corpus access.
     */
   private[graft] def hnswWalkDriverOver(s: SparkSession, undL: DataFrame,
                                         entryNodes: DataFrame, maxLevel: Long,
                                         queries: DataFrame, k: Int, beam: Int,
-                                        rounds: Int): DataFrame = {
-    import s.implicits._
-    val qrows = withNorm(queries
-        .select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
-    val qv = qrows.map(q => q._1 -> (q._2, q._3)).toMap
-    def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
-      rows.groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).toSeq.distinct
-          .sortBy { case (n, sc) => (-sc, n) }.take(cut)
-      }
-    val qsDf = qrows.toSeq.toDF("q_id", "qv", "qnrm")
-    val entry = entryNodes
-      .select(col("node"), col("nv"))
-      .crossJoin(broadcast(qsDf))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // BEAM STATE ON THE DRIVER, bounded by the query batch (see
-    // graphSearch — same request-sized working set, same one-probe-job
-    // round shape; only ≤ Q·cut·2k scored candidates ever come back)
-    var state: Map[Long, Seq[(Long, Double)]] = topPerQ(entry, 1)
-    // expand returns true when the round left the state UNCHANGED —
-    // since the scored set is a pure function of the frontier, an
-    // unchanged state proves every further round at the SAME layer is a
-    // no-op, so the caller may skip them (exact fixed-point early exit;
-    // layers below still run — their edge sets differ).
-    def expand(layer: Long, cut: Int): Boolean = {
-      val frontier = state.toSeq.flatMap { case (q, ns) =>
-        ns.map(n => (q, n._1, qv(q)._1, qv(q)._2))
-      }
-      if (frontier.isEmpty) true
-      else {
-        val stDf = frontier.toDF("q_id", "node", "qv", "qnrm")
-        val scored = undL.filter(col("layer") === layer)
-          .join(broadcast(stDf), col("src") === col("node"))
-          .filter(col("dst") =!= col("q_id"))
-          .select(col("q_id"), col("dst"),
-            round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-              .as("score"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        val pooled = state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++ scored
-        val next = topPerQ(pooled, cut)
-        val unchanged = next == state
-        state = next
-        unchanged
-      }
-    }
-    // layers above maxLevel are empty by construction, so skipping them
-    // driver-side equals the oracle's static OracleMaxLayer..1 descent over
-    // zero-row layer CTEs
-    for (l <- maxLevel to 1L by -1L) {
-      var r = 0
-      var converged = false
-      while (r < HnswDescentRounds && !converged) { r += 1; converged = expand(l, 1) }
-    }
-    locally {
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) { r += 1; converged = expand(0L, beam) }
-    }
-    val out = state.toSeq.flatMap { case (q, ns) =>
-      ns.take(k).zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
-    }.sortBy(r => (r._1, r._2))
-    out.toDF("q_id", "rn", "vec_id", "score")
-  }
+                                        rounds: Int, probe: Boolean = false): DataFrame =
+    driverWalk(s, undL, entryNodes, FloatCos, queryRows(queries), k, beam, rounds,
+      descent = Some(maxLevel), probe = probe)
 
   /** Metadata-FILTERED layered descent — [[graphSearchFiltered]]'s dual
     * state applied to the hierarchy [[hnswSearch]] serves, which is the
@@ -3929,14 +4127,18 @@ object Ann {
                                              k: Int = GraphSearchK,
                                              beam: Int = GraphSearchBeam,
                                              rounds: Int = GraphSearchRounds,
-                                             distThreshold: Int = GraphSearchDistQ): DataFrame =
-    if (exceedsQ(queries, distThreshold))
-      hnswFilteredRoundsDist(s, dir, queries, k, beam, rounds,
+                                             distThreshold: Int = GraphSearchDistQ,
+                                             probe: Boolean = false): DataFrame =
+    driverQueries(queries, distThreshold) match {
+      case Some(qs) =>
+        val (entryNodes, maxLevel) = hnswEntryState(s, dir)
+        driverWalk(s, layeredIndex(s, dir, hnswGraph(s, dir), "hnsw_search_index"), entryNodes,
+          FloatCos, qs, k, beam, rounds, descent = Some(maxLevel),
+          filter = Some(WalkFilter(dir, false, GraphSearchFilterMod, GraphSearchFilterRes)),
+          probe = probe)
+      case None => hnswFilteredRoundsDist(s, dir, queries, k, beam, rounds,
         GraphSearchFilterMod, GraphSearchFilterRes)
-    else
-      hnswWalkFilteredDriver(s, dir,
-        layeredIndex(s, dir, hnswGraph(s, dir), "hnsw_search_index"),
-        queries, k, beam, rounds, GraphSearchFilterMod, GraphSearchFilterRes)
+    }
 
   /** Fully distributed filtered layered rounds — the large-Q path:
     * per-round state stays as (q_id, node, score) frames on executors
@@ -4014,119 +4216,22 @@ object Ann {
     distFinal(res, k)
   }
 
-  /** The driver-ranked filtered layered walk core (see
-    * [[hnswSearchFiltered]]): [[hnswWalkDriver]]'s descent + the flat
-    * filtered walk's dual base state, bounded by the request.
+  /** The driver-ranked filtered layered walk (see
+    * [[hnswSearchFiltered]]) over a prepared per-layer index: the
+    * descent, then the flat filtered walk's dual base state. The entry
+    * is the corpus's top level; the DEDUP-GATED callers pass the top
+    * SURVIVOR level instead (a product of the collapse there, not a
+    * pure vec_id function).
     */
   private[graft] def hnswWalkFilteredDriver(s: SparkSession, dir: String, undL: DataFrame,
-                                     queries: DataFrame, k: Int, beam: Int, rounds: Int,
-                                     fMod: Long, fRes: Long,
-                                     byId: Boolean = false,
-                                     entryOverride: Option[(DataFrame, Long)] = None)
-      : DataFrame = {
-    import s.implicits._
-    val nTot = Graft.tableRows(s, dir, "embeddings")
-    val nPass = filterPassCount(s, dir, byId, fMod, fRes)
-    val ef = adaptiveEf(beam, nTot, nPass)
-    val qrows = withNorm(queries
-        .select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
-    val qv = qrows.map(q => q._1 -> (q._2, q._3)).toMap
-    def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
-      rows.groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).toSeq.distinct
-          .sortBy { case (n, sc) => (-sc, n) }.take(cut)
-      }
-    // entry: the full-corpus top level by default; the DEDUP-GATED
-    // callers pass the top SURVIVOR level explicitly (entry is a
-    // product of the collapse there, not a pure vec_id function)
+                                            queries: DataFrame, k: Int, beam: Int, rounds: Int,
+                                            fMod: Long, fRes: Long,
+                                            byId: Boolean = false,
+                                            entryOverride: Option[(DataFrame, Long)] = None,
+                                            probe: Boolean = false): DataFrame = {
     val (entryNodes, maxLevel) = entryOverride.getOrElse(hnswEntryState(s, dir))
-    val qsDf = qrows.toSeq.toDF("q_id", "qv", "qnrm")
-    val entry = entryNodes
-      .crossJoin(broadcast(qsDf))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    var state: Map[Long, Seq[(Long, Double)]] = topPerQ(entry, 1)
-    def frontierDf(): Option[DataFrame] = {
-      val frontier = state.toSeq.flatMap { case (q, ns) =>
-        ns.map(n => (q, n._1, qv(q)._1, qv(q)._2))
-      }
-      if (frontier.isEmpty) None else Some(frontier.toDF("q_id", "node", "qv", "qnrm"))
-    }
-    // descent: unfiltered greedy navigation, exactly hnswWalkDriver's
-    // (with its fixed-point early exit per layer — an unchanged greedy
-    // state at a layer makes the remaining rounds there no-ops)
-    for (l <- maxLevel to 1L by -1L) {
-      var r = 0
-      var converged = false
-      while (r < HnswDescentRounds && !converged) {
-        r += 1
-        converged = true
-        frontierDf().foreach { stDf =>
-          val scored = undL.filter(col("layer") === l)
-            .join(broadcast(stDf), col("src") === col("node"))
-            .filter(col("dst") =!= col("q_id"))
-            .select(col("q_id"), col("dst"),
-              round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-                .as("score"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          val next = topPerQ(state.toSeq.flatMap { case (q, ns) =>
-            ns.map(n => (q, n._1, n._2)) } ++ scored, 1)
-          converged = next == state
-          state = next
-        }
-      }
-    }
-    // base phase seed: the accumulator starts from the descent's
-    // arrival node where it passes the filter (one bounded lookup job)
-    val arrivals = state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) }
-    var res: Map[Long, Seq[(Long, Double)]] =
-      if (arrivals.isEmpty) Map.empty
-      else {
-        val passing = Graft.embeddings(s, dir)
-          .select(col("vec_id").as("node"), col("label").as("nlabel"))
-          .join(broadcast(arrivals.toDF("q_id", "node", "score")), "node")
-          .filter(pmod((if (byId) col("node") else col("nlabel")).cast("long"),
-            lit(fMod)) === lit(fRes))
-          .select(col("q_id"), col("node"), col("score"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        topPerQ(passing, k)
-      }
-    // dual-state fixed point: both the beam and the accumulator must be
-    // unchanged before the remaining base rounds can be skipped (exact)
-    locally {
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) {
-        r += 1
-        converged = true
-        frontierDf().foreach { stDf =>
-          val scored = undL.filter(col("layer") === 0L)
-            .join(broadcast(stDf), col("src") === col("node"))
-            .filter(col("dst") =!= col("q_id"))
-            .select(col("q_id"), col("dst"),
-              round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-                .as("score"),
-              (pmod((if (byId) col("dst") else col("dlabel")).cast("long"),
-                lit(fMod)) === lit(fRes)).as("pass"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-          val nextState = topPerQ(state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++
-            scored.map(t => (t._1, t._2, t._3)), ef)
-          val nextRes = topPerQ(res.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++
-            scored.filter(_._4).map(t => (t._1, t._2, t._3)), k)
-          converged = nextState == state && nextRes == res
-          state = nextState
-          res = nextRes
-        }
-      }
-    }
-    val out = res.toSeq.flatMap { case (q, ns) =>
-      ns.take(k).zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
-    }.sortBy(r => (r._1, r._2))
-    out.toDF("q_id", "rn", "vec_id", "score")
+    driverWalk(s, undL, entryNodes, FloatCos, queryRows(queries), k, beam, rounds,
+      descent = Some(maxLevel), filter = Some(WalkFilter(dir, byId, fMod, fRes)), probe = probe)
   }
 
   /** Recall degradation CURVE of the FILTERED LAYERED walk — the
@@ -4143,8 +4248,8 @@ object Ann {
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))
     val undL = layeredIndex(s, dir, hnswGraph(s, dir), "hnsw_search_index")
     // the three selectivity branches are independent walks over the one
-    // memoized index — overlap them (Graft.inParallel, guide §2.6):
-    // each branch's bounded per-round probe jobs fill the others' gaps;
+    // memoized index — overlap them (Graft.inParallel, guide §2.6); the
+    // racing first walks share one snapshot build (its per-key latch);
     // branch order (and therefore the unioned output) is preserved
     Graft.inParallel(FilterCurveMods) { m =>
       val nPass = filterPassCount(s, dir, byId = true, m, FilterCurveRes)
@@ -4188,8 +4293,9 @@ object Ann {
                       beam: Int = GraphSearchBeam,
                       rounds: Int = GraphSearchRounds): DataFrame =
     // the keyed query batch is statically bounded (20 < GraphSearchDistQ)
-    // — driver path without paying a count job per request
-    graphSearchInt8Driver(s, dir, graphSearchQueries(s, dir), k, beam, rounds)
+    // — driver path without a routing probe
+    graphSearchInt8DriverOver(s, int8Index(s, dir), int8Cents(s, dir),
+      graphSearchQueries(s, dir), k, beam, rounds)
 
   /** The int8 ENTRY SET: the √N centroid ids with their quantized
     * codes + integer-exact norms — the quantized twin of the flat
@@ -4282,14 +4388,10 @@ object Ann {
     */
   def graphSearchFilteredDeduped(s: SparkSession, dir: String, k: Int = GraphSearchK,
                                  beam: Int = GraphSearchBeam,
-                                 rounds: Int = GraphSearchRounds): DataFrame = {
-    val cents = Graft.embeddings(s, dir)
-      .filter(col("vec_id") < sqrtFanout(Graft.tableRows(s, dir, "embeddings")))
-      .select(col("vec_id").as("node"), col("embedding").as("nv"), col("label").as("nlabel"))
-    graphSearchFilteredDriverOver(s, dir, dedupedSearchIndex(s, dir), cents,
+                                 rounds: Int = GraphSearchRounds): DataFrame =
+    graphSearchFilteredDriverOver(s, dir, dedupedSearchIndex(s, dir), flatEntrySet(s, dir),
       graphSearchQueries(s, dir), k, beam, rounds, byId = false,
       GraphSearchFilterMod, GraphSearchFilterRes)
-  }
 
   /** [[graphSearchFilteredDeduped]] run OFF THE WRITTEN generation —
     * the filtered×deduped cell's deployment split:
@@ -4385,12 +4487,10 @@ object Ann {
   def hnswSearchFilteredDedupedFromGen(s: SparkSession, dir: String, k: Int = GraphSearchK,
                                        beam: Int = GraphSearchBeam,
                                        rounds: Int = GraphSearchRounds): DataFrame = {
-    val (adj, entry) = writtenHnswDedupedGen(s, dir)
-    val mlRow = entry.agg(max(col("level")).as("ml")).collect().head
-    val maxLevel = if (mlRow.isNullAt(0)) 0L else mlRow.getLong(0)
-    hnswWalkFilteredDriver(s, dir, adj, graphSearchQueries(s, dir), k, beam, rounds,
+    val g = hnswDedupGen(s, dir)
+    hnswWalkFilteredDriver(s, dir, g.adj, graphSearchQueries(s, dir), k, beam, rounds,
       GraphSearchFilterMod, GraphSearchFilterRes, byId = false,
-      entryOverride = Some((entry.select(col("node"), col("nv")), maxLevel)))
+      entryOverride = Some((g.entryNodes, g.maxLevel)))
   }
 
   /** Routed entry for EXPLICIT query batches through the int8 walk —
@@ -4399,11 +4499,13 @@ object Ann {
     */
   private[graft] def graphSearchInt8Batch(s: SparkSession, dir: String, queries: DataFrame,
                                           k: Int, beam: Int, rounds: Int,
-                                          distThreshold: Int = GraphSearchDistQ): DataFrame =
-    if (exceedsQ(queries, distThreshold))
-      graphSearchInt8RoundsDist(s, dir, queries, k, beam, rounds)
-    else
-      graphSearchInt8Driver(s, dir, queries, k, beam, rounds)
+                                          distThreshold: Int = GraphSearchDistQ,
+                                          probe: Boolean = false): DataFrame =
+    driverQueries(queries, distThreshold) match {
+      case Some(qs) => driverWalk(s, int8Index(s, dir), int8Cents(s, dir), Int8Cos, qs,
+        k, beam, rounds, probe = probe)
+      case None => graphSearchInt8RoundsDist(s, dir, queries, k, beam, rounds)
+    }
 
   /** Fully distributed int8 rounds — the large-Q path over the
     * quantized index: beam state never visits the driver; scoring is
@@ -4445,69 +4547,15 @@ object Ann {
     distFinal(state, k)
   }
 
-  /** The driver-ranked int8 walk core over an explicit query batch
-    * (see [[graphSearchInt8]] for semantics).
-    */
-  private def graphSearchInt8Driver(s: SparkSession, dir: String, queries: DataFrame,
-                                    k: Int, beam: Int, rounds: Int): DataFrame =
-    graphSearchInt8DriverOver(s, int8Index(s, dir), int8Cents(s, dir), queries,
-      k, beam, rounds)
-
-  /** The driver-ranked int8 walk over EXPLICIT index frames — the
-    * [[beamSearchOver]] split applied to the quantized tier: callers
-    * differ only in where the (src, dst, dq, dn8) adjacency and the
-    * (node, nq, nn8) entry set come from (session memo vs a written
-    * generation).
+  /** The driver-ranked int8 walk (see [[graphSearchInt8]]) over
+    * EXPLICIT index frames: callers differ only in where the (src, dst,
+    * dq, dn8) adjacency and the (node, nq, nn8) entry set come from
+    * (session memo vs a written generation).
     */
   private[graft] def graphSearchInt8DriverOver(s: SparkSession, und8: DataFrame, cents8: DataFrame,
-                                        queries: DataFrame,
-                                        k: Int, beam: Int, rounds: Int): DataFrame = {
-    import s.implicits._
-    val qrows = queries
-      .select(col("q_id"), call_function("fvec_quantize", col("qv")).as("q8"))
-      .select(col("q_id"), col("q8"),
-        sqrt(call_function("lvec_dot", col("q8"), col("q8")).cast("double")).as("qn8"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getDouble(2)))
-    val qv = qrows.map(q => q._1 -> (q._2, q._3)).toMap
-    def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
-      rows.groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).toSeq.distinct
-          .sortBy { case (n, sc) => (-sc, n) }.take(cut)
-      }
-    val qsDf = qrows.toSeq.toDF("q_id", "q8", "qn8")
-    val entry = cents8
-      .crossJoin(broadcast(qsDf))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(call_function("lvec_dot", col("nq"), col("q8")).cast("double")
-          / (col("nn8") * col("qn8")), 6).as("score"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    var state: Map[Long, Seq[(Long, Double)]] = topPerQ(entry, 1)
-    // fixed-point early exit (see beamSearchRoundsDriver) — exact
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val frontier = state.toSeq.flatMap { case (q, ns) =>
-        ns.map(n => (q, n._1, qv(q)._1, qv(q)._2))
-      }
-      val stDf = frontier.toDF("q_id", "node", "q8", "qn8")
-      val scored = und8.join(broadcast(stDf), col("src") === col("node"))
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst"),
-          round(call_function("lvec_dot", col("dq"), col("q8")).cast("double")
-            / (col("dn8") * col("qn8")), 6).as("score"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val pooled = state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++ scored
-      val next = topPerQ(pooled, beam)
-      converged = next == state
-      state = next
-    }
-    val out = state.toSeq.flatMap { case (q, ns) =>
-      ns.take(k).zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
-    }.sortBy(r => (r._1, r._2))
-    out.toDF("q_id", "rn", "vec_id", "score")
-  }
+                                               queries: DataFrame,
+                                               k: Int, beam: Int, rounds: Int): DataFrame =
+    driverWalk(s, und8, cents8, Int8Cos, queryRows(queries), k, beam, rounds)
 
   /** Metadata-FILTERED search over the QUANTIZED index — the remaining
     * combination a serving fleet runs (Qdrant composes scalar
@@ -4549,13 +4597,16 @@ object Ann {
                                                   k: Int = GraphSearchK,
                                                   beam: Int = GraphSearchBeam,
                                                   rounds: Int = GraphSearchRounds,
-                                                  distThreshold: Int = GraphSearchDistQ): DataFrame =
-    if (exceedsQ(queries, distThreshold))
-      int8FilteredRoundsDist(s, dir, queries, k, beam, rounds,
+                                                  distThreshold: Int = GraphSearchDistQ,
+                                                  probe: Boolean = false): DataFrame =
+    driverQueries(queries, distThreshold) match {
+      case Some(qs) => driverWalk(s, int8Index(s, dir), int8Cents(s, dir), Int8Cos, qs,
+        k, beam, rounds,
+        filter = Some(WalkFilter(dir, false, GraphSearchFilterMod, GraphSearchFilterRes)),
+        probe = probe)
+      case None => int8FilteredRoundsDist(s, dir, queries, k, beam, rounds,
         GraphSearchFilterMod, GraphSearchFilterRes)
-    else
-      graphSearchInt8FilteredDriverOver(s, dir, int8Index(s, dir), int8Cents(s, dir),
-        queries, k, beam, rounds, GraphSearchFilterMod, GraphSearchFilterRes)
+    }
 
   /** Fully distributed int8-filtered rounds — the large-Q path: dual
     * per-round state stays on executors ([[distCutRound]] twice per
@@ -4610,69 +4661,16 @@ object Ann {
     distFinal(res, k)
   }
 
-  /** The dual-state int8 walk core over caller-supplied quantized
-    * index frames (und8 with dlabel, cents8 with nlabel).
+  /** The dual-state int8 walk over caller-supplied quantized index
+    * frames (und8 with dlabel, cents8 with nlabel).
     */
   private[graft] def graphSearchInt8FilteredDriverOver(s: SparkSession, dir: String,
-                                                und8: DataFrame, cents8: DataFrame,
-                                                queries: DataFrame, k: Int, beam: Int,
-                                                rounds: Int, fMod: Long,
-                                                fRes: Long): DataFrame = {
-    import s.implicits._
-    val nTot = Graft.tableRows(s, dir, "embeddings")
-    val ef = adaptiveEf(beam, nTot, filterPassCount(s, dir, byId = false, fMod, fRes))
-    val qrows = queries
-      .select(col("q_id"), call_function("fvec_quantize", col("qv")).as("q8"))
-      .select(col("q_id"), col("q8"),
-        sqrt(call_function("lvec_dot", col("q8"), col("q8")).cast("double")).as("qn8"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getDouble(2)))
-    val qv = qrows.map(q => q._1 -> (q._2, q._3)).toMap
-    def topPerQ(rows: Iterable[(Long, Long, Double)], cut: Int): Map[Long, Seq[(Long, Double)]] =
-      rows.groupBy(_._1).map { case (q, rs) =>
-        q -> rs.map(r => (r._2, r._3)).toSeq.distinct
-          .sortBy { case (n, sc) => (-sc, n) }.take(cut)
-      }
-    val qsDf = qrows.toSeq.toDF("q_id", "q8", "qn8")
-    val entry = cents8
-      .crossJoin(broadcast(qsDf))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(call_function("lvec_dot", col("nq"), col("q8")).cast("double")
-          / (col("nn8") * col("qn8")), 6).as("score"),
-        (pmod(col("nlabel").cast("long"), lit(fMod)) === lit(fRes)).as("pass"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-    var state: Map[Long, Seq[(Long, Double)]] = topPerQ(entry.map(e => (e._1, e._2, e._3)), 1)
-    var res: Map[Long, Seq[(Long, Double)]] =
-      topPerQ(entry.filter(_._4).map(e => (e._1, e._2, e._3)), k)
-    // dual-state fixed-point early exit (see graphSearchFilteredDriverOver)
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val frontier = state.toSeq.flatMap { case (q, ns) =>
-        ns.map(n => (q, n._1, qv(q)._1, qv(q)._2))
-      }
-      val stDf = frontier.toDF("q_id", "node", "q8", "qn8")
-      val scored = und8.join(broadcast(stDf), col("src") === col("node"))
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst"),
-          round(call_function("lvec_dot", col("dq"), col("q8")).cast("double")
-            / (col("dn8") * col("qn8")), 6).as("score"),
-          (pmod(col("dlabel").cast("long"), lit(fMod)) === lit(fRes)).as("pass"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
-      val nextState = topPerQ(state.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++
-        scored.map(t => (t._1, t._2, t._3)), ef)
-      val nextRes = topPerQ(res.toSeq.flatMap { case (q, ns) => ns.map(n => (q, n._1, n._2)) } ++
-        scored.filter(_._4).map(t => (t._1, t._2, t._3)), k)
-      converged = nextState == state && nextRes == res
-      state = nextState
-      res = nextRes
-    }
-    val out = res.toSeq.flatMap { case (q, ns) =>
-      ns.take(k).zipWithIndex.map { case ((n, sc), i) => (q, (i + 1).toLong, n, sc) }
-    }.sortBy(r => (r._1, r._2))
-    out.toDF("q_id", "rn", "vec_id", "score")
-  }
+                                                       und8: DataFrame, cents8: DataFrame,
+                                                       queries: DataFrame, k: Int, beam: Int,
+                                                       rounds: Int, fMod: Long,
+                                                       fRes: Long): DataFrame =
+    driverWalk(s, und8, cents8, Int8Cos, queryRows(queries), k, beam, rounds,
+      filter = Some(WalkFilter(dir, false, fMod, fRes)))
 
   /** Recall@k of the layered HNSW search vs the exact per-query top-k —
     * [[graphSearchRecall]]'s twin over [[hnswSearch]], so the two entry

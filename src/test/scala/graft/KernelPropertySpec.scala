@@ -8,7 +8,7 @@ import graft.functions.{TextHashes, VecKernels}
   * gate covers the corpus distribution; these cover the corners
   * (unicode, empty strings, degenerate arrays, adversarial tokens).
   */
-class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
+class KernelPropertySpec extends SparkSpec {
 
   private val rnd = new scala.util.Random(421)
   private val pieces = Array("data", "a", "", "über", "a-b", "123", "x9", "zz")
@@ -115,6 +115,28 @@ class KernelPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       val c2 = VecKernels.cosF(b, a)
       assert(c1 === c2)
       assert(c1 >= -1.0000001 && c1 <= 1.0000001, s"xs=$xs ys=$ys")
+    }
+  }
+
+  test("round6 equals Spark's round(x, 6), NaN, ±Inf, -0.0 and half-way values included") {
+    import org.apache.spark.sql.functions.{col, round}
+    import spark.implicits._
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0,
+      Double.MaxValue, Double.MinValue, Double.MinPositiveValue, 5e-7, -5e-7, 1.2345675, -2.5e-6)
+    // k·1e-6 + 5e-7: on the 7th-decimal half-way point of the rounding grid
+    val halfway = Seq.fill(N)((rnd.nextInt(2000001) - 1000000) * 1e-6 + 5e-7)
+    val scaled = Seq.fill(N)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(16) - 8))
+    val bits = Seq.fill(N)(java.lang.Double.longBitsToDouble(rnd.nextLong()))
+    val xs = (special ++ halfway ++ scaled ++ bits).zipWithIndex.toDF("x", "i")
+    val want = xs.select(col("i"), round(col("x"), 6))
+    // the local relation folds the projection on the driver (interpreted
+    // Round); the repartitioned twin runs it in generated code
+    Seq(want, xs.repartition(2).select(col("i"), round(col("x"), 6))).foreach { df =>
+      val got = df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      (special ++ halfway ++ scaled ++ bits).zipWithIndex.foreach { case (x, i) =>
+        assert(java.lang.Double.doubleToLongBits(VecKernels.round6(x)) ===
+          java.lang.Double.doubleToLongBits(got(i)), s"x=$x")
+      }
     }
   }
 

@@ -239,6 +239,13 @@ class PlanLintSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       collectWithSubqueries(plan) { case n => n.expressions }.flatten
         .flatMap(_.collect { case a: Alias => a.exprId -> a.child }).toMap
     collectWithSubqueries(plan) {
+      // no partitionBy at all (Spark logs "WindowExec: No Partition
+      // Defined"): one task holds the whole input, so a row bound below
+      // must make it tiny — the inventory's two such windows (new_users'
+      // running total, hybrid_rrf_graph's BM25 rank) sit on a
+      // TakeOrderedAndProject of at most 10000 / n rows
+      case w: WindowExec if w.partitionSpec.isEmpty && !boundedRowsBelow(w.child, aliases) =>
+        "unpartitioned window over unbounded input"
       case w: WindowExec if boundedKeysOnly(w.partitionSpec, aliases) && !boundedInput(w.child) =>
         s"low-cardinality window over raw input (keys=${w.partitionSpec.flatMap(baseNames(_, aliases, Set.empty)).distinct.mkString(",")})"
       case w: WindowGroupLimitExec if boundedKeysOnly(w.partitionSpec, aliases) && !boundedInput(w.child) =>
@@ -320,6 +327,14 @@ class PlanLintSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .withColumn("r", row_number().over(Window.orderBy($"count".desc)))
     assert(!offenses(good).contains("SinglePartition exchange feeding Window/Sort"),
       s"lint over-fires on a bounded ranking:\n${good.queryExecution.executedPlan}")
+    // the sweep's row-bound rule: an unpartitioned window over raw rows
+    // fires, the limited twin does not
+    val raw = Graft.embeddings(spark, dir)
+      .withColumn("r", row_number().over(Window.orderBy($"vec_id")))
+    assert(offenses(raw).contains("unpartitioned window over unbounded input"),
+      s"sweep missed an unpartitioned window over raw rows:\n${raw.queryExecution.executedPlan}")
+    assert(!offenses(good).contains("unpartitioned window over unbounded input"),
+      s"sweep over-fires on a limited unpartitioned window:\n${good.queryExecution.executedPlan}")
   }
 
   test("canary: the lint descends into persisted (InMemoryRelation) subplans") {
