@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Per-JOB wall-clock attribution for one query's cold run — the
   * guide-§1 "where does the time go" instrument at bench conditions.
   * The solo graph builds' bench seconds at sf0.1 (2k vectors) are
@@ -75,7 +77,7 @@ object JobProbe {
     // charged JVM/codegen bring-up
     Seq("search_pipeline", "q1_agg", "events_hourly").foreach { w =>
       try SparkEntry.queries.get(w).foreach(_(spark, sfDir).count())
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => System.err.println(s"warm-up query $w failed: $e") }
     }
     Graft.releaseCaches()
 

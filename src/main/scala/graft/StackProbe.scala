@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Driver stack sampler — the guide-§7.3 thread-dump loop as a main:
   * runs each named query like JobProbe but samples the driver thread
   * every 25 ms and prints the hottest collapsed frames, attributing
@@ -25,7 +27,7 @@ object StackProbe {
 
     Seq("search_pipeline", "q1_agg", "events_hourly").foreach { w =>
       try SparkEntry.queries.get(w).foreach(_(spark, sfDir).count())
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => System.err.println(s"warm-up query $w failed: $e") }
     }
     Graft.releaseCaches()
 

@@ -1123,20 +1123,6 @@ object Ann {
       hnswEdgesCore(eS, hnswStoredCells(s, dir, split, nprobe).hint("SHUFFLE_HASH"), k)
     }
 
-  /** Probe-only twin of [[hnswStoredGraph]] with the cell assignment
-    * INLINE (uncached) — the full build's shape over the stored slice,
-    * used by ProbeHnswStored to isolate the r15 100x stored-build
-    * anomaly. Not memoized, not keyed.
-    */
-  private[graft] def hnswStoredGraphInline(s: SparkSession, dir: String, split: Long,
-                                           k: Int, nprobe: Int): DataFrame = {
-    val eS = Graft.embeddings(s, dir).filter(col("vec_id") < split)
-      .select(col("vec_id"), col("embedding"))
-    val nodes = hnswNodesOver(eS)
-    val cents = hnswCentsOver(nodes, hnswLevelsOver(eS), split, "hnswStoredGraphInline")
-    hnswEdgesFromCells(eS, hnswCellsOver(nodes, cents, nprobe), k)
-  }
-
   /** INCREMENTAL maintenance of the LAYERED index — [[nswGraphInsert]]'s
     * asymmetric pattern applied to the structure the serving walk
     * ([[hnswSearch]]) actually reads (until r15 the layered index was
@@ -1483,6 +1469,11 @@ object Ann {
       if (fc > 0) frontiers += frontier
       grew = fc > 0
       counts += ((r.toLong, counts.last._2 + fc))
+      // reached ⊆ corpus: a count past the cap means the adjacency names
+      // a node outside it, and the early fill would report a false census
+      if (counts.last._2 > cap)
+        throw new IllegalStateException(
+          s"census reached ${counts.last._2} nodes, past its cap of $cap census-visible nodes")
       r += 1
     }
     while (r <= rounds) { counts += ((r.toLong, counts.last._2)); r += 1 }
@@ -2654,30 +2645,39 @@ object Ann {
     */
   val GraphSearchDistQ = 8192
 
-  /** The request's query rows (q_id, qv) for a driver-ranked walk, or
-    * None when the batch exceeds `distThreshold` and the rounds run
-    * distributed. Collecting at most threshold+1 rows is both the
-    * routing probe and the walk's one query read, so the probe costs no
-    * job of its own, is bounded by the threshold rather than the batch,
-    * and a non-deterministic caller frame is walked with exactly the
-    * rows it was routed on.
+  /** The routed entry of every EXPLICIT query batch (batch-serving
+    * jobs, the large-Q probe, the parity specs): at or below
+    * `distThreshold` query rows the [[driverWalk]], above it the
+    * [[distWalk]] over the same frames, scorer and filter — both compute
+    * identical rows (Round15/16/17OpsSpec, ServingLifecycleSpec).
+    * Collecting at most threshold+1 rows is both the routing probe and
+    * the driver walk's one query read, so the probe costs no job of its
+    * own, is bounded by the threshold rather than the batch, and a
+    * non-deterministic caller frame is walked with exactly the rows it
+    * was routed on. `probe` forces the driver walk's Spark-probe source.
     */
-  private def driverQueries(queries: DataFrame, distThreshold: Int): Option[Array[Row]] = {
+  private[graft] def walkBatch(s: SparkSession, adj: DataFrame, entryNodes: DataFrame,
+                               sc: WalkScorer, queries: DataFrame, k: Int, beam: Int,
+                               rounds: Int, descent: Option[Long], filter: Option[WalkFilter],
+                               distThreshold: Int, probe: Boolean): DataFrame = {
     // clamped +1: specs pin a path with distThreshold = Int.MaxValue,
     // which a naive +1 would overflow into a negative LIMIT
     val rows = queries.select(col("q_id"), col("qv"))
       .limit(math.min(distThreshold.toLong + 1, Int.MaxValue).toInt).collect()
-    if (rows.length > distThreshold) None else Some(rows)
+    if (rows.length > distThreshold)
+      distWalk(s, adj, entryNodes, sc, queries, k, beam, rounds, descent, filter)
+    else driverWalk(s, adj, entryNodes, sc, rows, k, beam, rounds, descent, filter, probe)
   }
 
   private def queryRows(queries: DataFrame): Array[Row] =
     queries.select(col("q_id"), col("qv")).collect()
 
-  /** How a driver-ranked walk scores a query against a node: the float
-    * cosine round(fvec_dot(v, qv) / (nrm·qnrm), 6) or the int8 one
+  /** How a walk scores a query against a node: the float cosine
+    * round(fvec_dot(v, qv) / (nrm·qnrm), 6) or the int8 one
     * round(lvec_dot(q, q8) / (n8·qn8), 6). The in-process fold
     * ([[VecKernels]]) is the same double arithmetic as the Catalyst
-    * expression, so the two neighbour sources return bit-identical
+    * expression ([[scoreCol]], which the Spark-probe source and the
+    * distributed walk use), so every path returns bit-identical
     * scores; node norms come from the frames, query norms are
     * sqrt(dot(q, q)).
     */
@@ -2691,6 +2691,10 @@ object Ann {
     def dotCol(a: Column, b: Column): Column
     /** Norm of an entry row: float entry sets carry no norm column. */
     def entryNrm: Column
+    /** The (qv, qnrm) query columns [[scoreCol]] reads, from the float
+      * query vector: the frame form of [[query]].
+      */
+    def queryCols(qv: Column): (Column, Column)
     def score(v: AnyRef, n: Double, q: WalkQuery): Double = VecKernels.cos6(dot(v, q.vec), n, q.nrm)
     def scoreCol(v: Column, n: Column): Column = round(dotCol(v, col("qv")) / (n * col("qnrm")), 6)
   }
@@ -2702,6 +2706,7 @@ object Ann {
     def read(r: Row, i: Int): AnyRef = r.getSeq[Float](i).toArray
     def dotCol(a: Column, b: Column): Column = VectorOps.dot(a, b)
     def entryNrm: Column = VectorOps.norm(col("nv"))
+    def queryCols(qv: Column): (Column, Column) = (qv, VectorOps.norm(qv))
   }
 
   private[graft] object Int8Cos extends WalkScorer("dq", "dn8", "nq", 8, ArrayType(LongType, false)) {
@@ -2714,6 +2719,10 @@ object Ann {
     def read(r: Row, i: Int): AnyRef = r.getSeq[Long](i).toArray
     def dotCol(a: Column, b: Column): Column = call_function("lvec_dot", a, b).cast("double")
     def entryNrm: Column = col("nn8")
+    def queryCols(qv: Column): (Column, Column) = {
+      val q8 = call_function("fvec_quantize", qv)
+      (q8, sqrt(dotCol(q8, q8)))
+    }
   }
 
   private[graft] final case class WalkQuery(id: Long, vec: AnyRef, nrm: Double)
@@ -2722,7 +2731,7 @@ object Ann {
     * res, over the corpus under `dir` (the adaptive ef's statistics and
     * the arrival lookup read it).
     */
-  private final case class WalkFilter(dir: String, byId: Boolean, mod: Long, res: Long) {
+  private[graft] final case class WalkFilter(dir: String, byId: Boolean, mod: Long, res: Long) {
     /** Spark's pmod, so negative labels and moduli match the column. */
     def pass(node: Long, label: java.lang.Long): Boolean = {
       if (!byId && label == null) false
@@ -2733,12 +2742,18 @@ object Ann {
     }
     def column(id: Column, label: Column): Column =
       pmod((if (byId) id else label).cast("long"), lit(mod)) === lit(res)
+    /** The rows of `nodes` (a bounded frame with a `node` column) whose
+      * corpus row passes the filter: a corpus join with `nodes`
+      * broadcast onto it, run on the executors.
+      */
+    def passingRows(s: SparkSession, nodes: DataFrame): DataFrame =
+      Graft.embeddings(s, dir).select(col("vec_id").as("node"), col("label").as("nlabel"))
+        .join(broadcast(nodes), "node")
+        .filter(column(col("node"), col("nlabel")))
     /** The bounded corpus lookup: which of `nodes` pass the filter. */
     def lookup(s: SparkSession, nodes: Seq[Long]): Set[Long] = {
       import s.implicits._
-      Graft.embeddings(s, dir).select(col("vec_id").as("node"), col("label").as("nlabel"))
-        .join(broadcast(nodes.distinct.toDF("node")), "node")
-        .filter(column(col("node"), col("nlabel")))
+      passingRows(s, nodes.distinct.toDF("node"))
         .select(col("node")).collect().map(_.getLong(0)).toSet
     }
   }
@@ -3000,6 +3015,26 @@ object Ann {
         .sortBy { case (n, sc) => (-sc, n) }.take(cut)
     }
 
+  /** A walk's base-layer beam width: `beam`, or for a filtered walk the
+    * adaptive ef of its filter's pass rate.
+    */
+  private def baseWidth(s: SparkSession, beam: Int, filter: Option[WalkFilter]): Int =
+    filter.fold(beam) { f =>
+      adaptiveEf(beam, Graft.tableRows(s, f.dir, "embeddings"),
+        filterPassCount(s, f.dir, f.byId, f.mod, f.res))
+    }
+
+  /** One walk phase: up to `maxRounds` rounds, stopping after the first
+    * round that leaves every state unchanged. A round's scored set is a
+    * pure function of its frontier, so every later round of the phase
+    * would be the identity — stopping there is exact.
+    */
+  private def untilFixed(maxRounds: Int)(round: => Boolean): Unit = {
+    var r = 0
+    var converged = false
+    while (r < maxRounds && !converged) { r += 1; converged = round }
+  }
+
   /** THE driver-ranked walk: beam state lives on the driver, bounded by
     * the query batch (Q·beam rows — the serving request's working set,
     * never the corpus). Entry and strategy:
@@ -3028,10 +3063,7 @@ object Ann {
                          descent: Option[Long] = None, filter: Option[WalkFilter] = None,
                          probe: Boolean = false): DataFrame = {
     import s.implicits._
-    val cut = filter.fold(beam) { f =>
-      adaptiveEf(beam, Graft.tableRows(s, f.dir, "embeddings"),
-        filterPassCount(s, f.dir, f.byId, f.mod, f.res))
-    }
+    val cut = baseWidth(s, beam, filter)
     val src: WalkSource = (if (probe) None else indexSnapshot(adj, sc))
       .map(idx => new SnapshotSource(s, idx, entrySnapshot(entryNodes, sc), sc))
       .getOrElse(new ProbeSource(s, adj, entryNodes, sc))
@@ -3062,23 +3094,18 @@ object Ann {
         unchanged
       }
     }
-    def phase(maxRounds: Int)(body: => Boolean): Unit = {
-      var r = 0
-      var converged = false
-      while (r < maxRounds && !converged) { r += 1; converged = body }
-    }
     // layers above maxLevel are empty by construction, so skipping them
     // equals the oracle's static OracleMaxLayer..1 descent over zero-row
     // layer CTEs
     descent.foreach { maxLevel =>
-      for (l <- maxLevel to 1L by -1L) phase(HnswDescentRounds)(step(l, 1, None))
+      for (l <- maxLevel to 1L by -1L) untilFixed(HnswDescentRounds)(step(l, 1, None))
       filter.foreach { f =>
         val arrivals = pooled(state)
         val pass = if (arrivals.isEmpty) Set.empty[Long] else src.passing(arrivals.map(_._2), f)
         res = topPerQ(arrivals.filter(a => pass(a._2)), k)
       }
     }
-    phase(rounds)(step(0L, cut, filter))
+    untilFixed(rounds)(step(0L, cut, filter))
     (if (filter.isDefined) res else state).toSeq.flatMap { case (q, ns) =>
       ns.take(k).zipWithIndex.map { case ((n, score), i) => (q, (i + 1).toLong, n, score) }
     }.sortBy(r => (r._1, r._2)).toDF("q_id", "rn", "vec_id", "score")
@@ -3105,110 +3132,34 @@ object Ann {
                              dir: String, k: Int, beam: Int, rounds: Int): DataFrame =
     driverWalk(s, undE, cents, FloatCos, queryRows(graphSearchQueries(s, dir)), k, beam, rounds)
 
-  /** Routed entry for EXPLICIT query batches (batch-serving jobs, the
-    * large-Q probe, the parity spec): at or below `distThreshold` the
-    * driver-ranked walk, above it [[beamSearchRoundsDist]]. Both paths
-    * compute identical values (same scoring, same (score desc, node)
-    * total order, same distinct-then-cut rounds) — spec-asserted in
-    * Round15OpsSpec. `probe` forces the Spark-probe neighbour source.
+  /** Routed entry for EXPLICIT query batches through the flat walk
+    * ([[walkBatch]]): the float scorer over the caller's index `undE`
+    * and entry set `cents`. Both paths compute identical values —
+    * spec-asserted in Round15OpsSpec.
     */
   private[graft] def beamSearchBatch(s: SparkSession, undE: DataFrame, cents: DataFrame,
                                      queries: DataFrame, k: Int, beam: Int, rounds: Int,
                                      distThreshold: Int = GraphSearchDistQ,
                                      probe: Boolean = false): DataFrame =
-    driverQueries(queries, distThreshold) match {
-      case Some(qs) => driverWalk(s, undE, cents, FloatCos, qs, k, beam, rounds, probe = probe)
-      case None => beamSearchRoundsDist(s, undE, cents, queries, k, beam, rounds)
-    }
+    walkBatch(s, undE, cents, FloatCos, queries, k, beam, rounds, None, None, distThreshold, probe)
 
-  /** Fully distributed beam rounds — the large-Q path: beam state is a
-    * (q_id, node, score) frame of Q·beam rows that NEVER visits the
-    * driver. Per round:
-    *
-    *  1. PROBE: state ⋈ index on node=src — the index side is
-    *    pre-partitioned by src ONCE (persisted with its hash
-    *    partitioning intact), so every round reshuffles only the
-    *    Q·beam frontier, never the 2kN-edge index;
-    *  2. SCORE: attach query vectors by joining the (small, persisted)
-    *    query frame on q_id — scoring inline in the projection, same
-    *    round-6 cosine as the driver path;
-    *  3. CUT: union with the carried state, distinct (score is a pure
-    *    function of (q_id, node), so distinct collapses re-discovered
-    *    nodes exactly like the driver-side dedup), per-query
-    *    row_number window on (score desc, node), keep top-beam;
-    *    localCheckpoint cuts the 8-round lineage (clustersUnionFind's
-    *    per-iteration pattern).
-    *
-    * Per-round cost: Q·beam·2k score kernels + two exchanges of
-    * Q·beam-row frames — independent of corpus size N, linear in the
-    * query batch, no driver funnel. Values are identical to the driver
-    * path by construction (same expressions, same total order).
+  /** Per-query (score desc, node) top-`cut` of (q_id, node, score)
+    * rows, with an eager localCheckpoint cutting the lineage.
     */
-  private def beamSearchRoundsDist(s: SparkSession, undE: DataFrame, cents: DataFrame,
-                                   queries: DataFrame, k: Int, beam: Int, rounds: Int): DataFrame = {
-    val qn = withNorm(queries.select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // index pre-partitioned by the probe key ONCE: rounds reuse the
-    // persisted partitioning, so only the frontier side ever exchanges.
-    // Both frames are call-scoped: every round ends in an EAGER
-    // localCheckpoint, so by the time this returns nothing downstream
-    // reads them — unpersist here rather than parking a GB-scale index
-    // copy in the cache registry under a shared key (ADVICE r15:
-    // interleaved searches over different dirs evicted each other).
-    val idx = undE.repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wBeam = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("node"))
-    // entry: score the √N centroid layer per query, keep the best
-    var state = qn.crossJoin(cents)
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"))
-      .withColumn("rn", row_number().over(wBeam)).filter(col("rn") === 1)
+  private def distTop(rows: DataFrame, cut: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("node"))
+    rows.withColumn("rn", row_number().over(w)).filter(col("rn") <= cut)
       .select(col("q_id"), col("node"), col("score"))
       .localCheckpoint(true)
-    // fixed-point early exit (r21, [[distUnchanged]]): a round that
-    // leaves the beam unchanged makes every later round the identity
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val scored = idx.join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-        .join(qn, "q_id")
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst").as("node"),
-          round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-            .as("score"))
-      val next = state.unionByName(scored).distinct()
-        .withColumn("rn", row_number().over(wBeam)).filter(col("rn") <= beam)
-        .select(col("q_id"), col("node"), col("score"))
-        .localCheckpoint(true)
-      converged = distUnchanged(next, state)
-      state = next
-    }
-    qn.unpersist(false)
-    idx.unpersist(false)
-    state.withColumn("rn", row_number().over(wBeam).cast("long")).filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("node").as("vec_id"), col("score"))
-      .orderBy(col("q_id"), col("rn"))
   }
 
   /** One distributed beam-state round: (state ∪ scored) → distinct →
-    * per-query (score desc, node) top-`cut` — the exact frame twin of
-    * the driver walk's `topPerQ` (score is a pure function of
-    * (q_id, node), so the frame distinct collapses re-discovered nodes
-    * identically), with an eager localCheckpoint cutting the per-round
-    * lineage. Shared by every distributed walk variant (flat uses its
-    * inline original; filtered/int8/layered route here).
+    * [[distTop]] — the exact frame twin of the driver walk's `topPerQ`
+    * (score is a pure function of (q_id, node), so the frame distinct
+    * collapses re-discovered nodes identically).
     */
-  private def distCutRound(state: DataFrame, scored: DataFrame, cut: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("node"))
-    state.unionByName(scored).distinct()
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= cut)
-      .select(col("q_id"), col("node"), col("score"))
-      .localCheckpoint(true)
-  }
+  private def distCutRound(state: DataFrame, scored: DataFrame, cut: Int): DataFrame =
+    distTop(state.unionByName(scored).distinct(), cut)
 
   /** Exact fixed-point test for the distributed walk rounds (r21, r20
     * VERDICT item 9 — the driver loops got this in r20): `next` came
@@ -3226,14 +3177,94 @@ object Ann {
   private def distUnchanged(next: DataFrame, state: DataFrame): Boolean =
     next.exceptAll(state).isEmpty
 
-  /** Final (q_id, rn, vec_id, score) cut shared by the distributed
-    * walks.
-    */
+  /** The distributed walk's final (q_id, rn, vec_id, score) cut. */
   private def distFinal(state: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("node"))
     state.withColumn("rn", row_number().over(w).cast("long")).filter(col("rn") <= k)
       .select(col("q_id"), col("rn"), col("node").as("vec_id"), col("score"))
       .orderBy(col("q_id"), col("rn"))
+  }
+
+  /** THE distributed walk — the large-Q twin of [[driverWalk]], with
+    * the same arguments, entry, phases, cut widths and filter seeds, but
+    * every per-query state a (q_id, node, score) frame of Q·width rows
+    * that never visits the driver. Per round:
+    *
+    *  1. PROBE: state ⋈ index on node = src (restricted to the round's
+    *     layer when the index has one). The index is repartitioned by
+    *     src and persisted ONCE per call, so a round exchanges only the
+    *     Q·beam frontier, never the 2kN-edge index;
+    *  2. SCORE: the query frame joined on q_id, scored inline in the
+    *     projection by the walk's [[WalkScorer]] (the same expression
+    *     the Spark-probe source uses), the filter's pass flag riding
+    *     along;
+    *  3. CUT: [[distCutRound]] at the phase's width and, when filtered,
+    *     again at k over the passing rows — both cuts read one scored
+    *     frame, so it is checkpointed first.
+    *
+    * Each phase stops at its [[distUnchanged]] fixed point (a filtered
+    * phase only when both states are unchanged). A layered filtered walk
+    * seeds its accumulator with the arrival nodes that pass by a corpus
+    * join with the Q-row state broadcast onto it — on the executors,
+    * never through a collect. Per-round cost: Q·beam·2k score kernels
+    * plus exchanges of Q·beam-row frames — independent of corpus size,
+    * no driver funnel.
+    */
+  private def distWalk(s: SparkSession, adj: DataFrame, entryNodes: DataFrame, sc: WalkScorer,
+                       queries: DataFrame, k: Int, beam: Int, rounds: Int,
+                       descent: Option[Long], filter: Option[WalkFilter]): DataFrame = {
+    val cut = baseWidth(s, beam, filter)
+    val (qv, qnrm) = sc.queryCols(col("qv"))
+    // Both frames are call-scoped: every round ends in an EAGER
+    // localCheckpoint, so by the time this returns nothing downstream
+    // reads them — unpersist here rather than parking a GB-scale index
+    // copy in the cache registry under a shared key (interleaved
+    // searches over different dirs evicted each other).
+    val qn = queries.select(col("q_id"), qv.as("qv"), qnrm.as("qnrm"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val idx = adj.repartition(col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cands = Seq(col("q_id"), col("node"), col("score"))
+    // (q_id, node, score[, pass]) of `pairs`' candidates `id` (≠ q_id)
+    def scored(pairs: DataFrame, id: Column, vec: Column, nrm: Column, label: Column,
+               f: Option[WalkFilter]): DataFrame = {
+      val out = pairs.filter(id =!= col("q_id"))
+        .select(Seq(col("q_id"), id.as("node"), sc.scoreCol(vec, nrm).as("score")) ++
+          f.map(_.column(id, label).as("pass")): _*)
+      if (f.isDefined) out.localCheckpoint(true) else out
+    }
+
+    val seedRes = filter.isDefined && descent.isEmpty
+    val entry = scored(qn.crossJoin(entryNodes), col("node"), col(sc.entryVec), sc.entryNrm,
+      col("nlabel"), if (seedRes) filter else None)
+    var state = distTop(entry.select(cands: _*), 1)
+    var res =
+      if (seedRes) Some(distTop(entry.filter(col("pass")).select(cands: _*).distinct(), k)) else None
+    // one round; true when it left the state(s) unchanged
+    def step(layer: Long, width: Int, f: Option[WalkFilter]): Boolean = {
+      val hop = scored(
+        (if (adj.columns.contains("layer")) idx.filter(col("layer") === layer) else idx)
+          .join(state.select(col("q_id"), col("node")), col("src") === col("node"))
+          .join(qn, "q_id"),
+        col("dst"), col(sc.vec), col(sc.nrm), col("dlabel"), f)
+      val next = distCutRound(state, hop.select(cands: _*), width)
+      val nextRes = f.map(_ => distCutRound(res.get, hop.filter(col("pass")).select(cands: _*), k))
+      val unchanged = distUnchanged(next, state) && nextRes.forall(distUnchanged(_, res.get))
+      state = next
+      if (nextRes.isDefined) res = nextRes
+      unchanged
+    }
+    descent.foreach { maxLevel =>
+      for (l <- maxLevel to 1L by -1L) untilFixed(HnswDescentRounds)(step(l, 1, None))
+      // the accumulator seed: the arrival nodes that pass
+      filter.foreach { f =>
+        res = Some(distTop(f.passingRows(s, state).select(cands: _*).distinct(), k))
+      }
+    }
+    untilFixed(rounds)(step(0L, cut, filter))
+    qn.unpersist(false)
+    idx.unpersist(false)
+    distFinal(res.getOrElse(state), k)
   }
 
   private val writtenGraphGens =
@@ -3759,82 +3790,18 @@ object Ann {
       graphSearchQueries(s, dir), k, beam, rounds, byId, fMod, fRes)
 
   /** Routed entry for EXPLICIT query batches through the FILTERED walk
-    * — [[beamSearchBatch]]'s dispatch applied to the dual-state
-    * variant: at or below `distThreshold` the two per-query states
-    * live on the driver (bounded by the request), above it the rounds
-    * run as Spark jobs ([[graphSearchFilteredRoundsDist]]). Values
-    * identical on both paths (same scoring expression, same adaptive
-    * ef, same (score desc, node) total order) — spec-asserted in
-    * Round16OpsSpec.
+    * ([[walkBatch]]): the flat walk's frames with the (mod, res) filter,
+    * so both routes run the dual state (navigation beam at the adaptive
+    * ef, filter-passing accumulator at k). Values identical on both
+    * paths — spec-asserted in Round16OpsSpec.
     */
   private[graft] def graphSearchFilteredBatch(s: SparkSession, dir: String, queries: DataFrame,
                                               k: Int, beam: Int, rounds: Int, byId: Boolean,
                                               fMod: Long, fRes: Long,
                                               distThreshold: Int = GraphSearchDistQ,
                                               probe: Boolean = false): DataFrame =
-    driverQueries(queries, distThreshold) match {
-      case Some(qs) => driverWalk(s, graphSearchIndex(s, dir), flatEntrySet(s, dir), FloatCos, qs,
-        k, beam, rounds, filter = Some(WalkFilter(dir, byId, fMod, fRes)), probe = probe)
-      case None => graphSearchFilteredRoundsDist(s, dir, queries, k, beam, rounds, byId, fMod, fRes)
-    }
-
-  /** Fully distributed filtered rounds — the large-Q path: BOTH
-    * per-query states (navigation beam at adaptive ef, filter-passing
-    * result accumulator at k) are (q_id, node, score) frames that never
-    * visit the driver. Each round scores the frontier's neighborhood
-    * ONCE (pass flag riding the projection) and feeds both cuts — the
-    * same one-scoring-per-round shape as the driver walk, so per-round
-    * cost is Q·ef·2k score kernels + bounded-frame exchanges,
-    * independent of corpus size.
-    */
-  private def graphSearchFilteredRoundsDist(s: SparkSession, dir: String, queries: DataFrame,
-                                            k: Int, beam: Int, rounds: Int, byId: Boolean,
-                                            fMod: Long, fRes: Long): DataFrame = {
-    val nTot = Graft.tableRows(s, dir, "embeddings")
-    val ef = adaptiveEf(beam, nTot, filterPassCount(s, dir, byId, fMod, fRes))
-    def passCol(id: Column, label: Column): Column =
-      (pmod((if (byId) id else label).cast("long"), lit(fMod)) === lit(fRes)).as("pass")
-    val qn = withNorm(queries.select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idx = graphSearchIndex(s, dir).repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val entry = qn.crossJoin(flatEntrySet(s, dir))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"),
-        passCol(col("node"), col("nlabel")))
-      .localCheckpoint(true)
-    var state = distCutRound(entry.limit(0).drop("pass"),
-      entry.select(col("q_id"), col("node"), col("score")), 1)
-    var res = distCutRound(entry.limit(0).drop("pass"),
-      entry.filter(col("pass")).select(col("q_id"), col("node"), col("score")), k)
-    // dual-state fixed point (r21, [[distUnchanged]]): both the beam
-    // and the result accumulator must be unchanged before exiting
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val scored = idx.join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-        .join(qn, "q_id")
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst").as("node"),
-          round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-            .as("score"),
-          passCol(col("dst"), col("dlabel")))
-        .localCheckpoint(true)
-      val nextState = distCutRound(state, scored.select(col("q_id"), col("node"), col("score")), ef)
-      val nextRes = distCutRound(res, scored.filter(col("pass"))
-        .select(col("q_id"), col("node"), col("score")), k)
-      converged = distUnchanged(nextState, state) && distUnchanged(nextRes, res)
-      state = nextState
-      res = nextRes
-    }
-    qn.unpersist(false)
-    idx.unpersist(false)
-    distFinal(res, k)
-  }
+    walkBatch(s, graphSearchIndex(s, dir), flatEntrySet(s, dir), FloatCos, queries, k, beam, rounds,
+      None, Some(WalkFilter(dir, byId, fMod, fRes)), distThreshold, probe)
 
   /** The filtered walk over CALLER-SUPPLIED index frames: `undE` = the
     * undirected adjacency with payload (src, dst, dv, dnrm, dlabel) and
@@ -3978,87 +3945,18 @@ object Ann {
     }
 
   /** Routed entry for EXPLICIT query batches through the layered HNSW
-    * walk — [[beamSearchBatch]]'s dispatch applied to the hierarchical
-    * descent; values identical on both paths (Round16OpsSpec).
+    * walk ([[walkBatch]]) — the hierarchical descent; values identical
+    * on both paths (Round16OpsSpec).
     */
   private[graft] def hnswSearchBatch(s: SparkSession, dir: String, edges: DataFrame,
                                      memoKey: String, queries: DataFrame,
                                      k: Int = GraphSearchK, beam: Int = GraphSearchBeam,
                                      rounds: Int = GraphSearchRounds,
                                      distThreshold: Int = GraphSearchDistQ,
-                                     probe: Boolean = false): DataFrame =
-    driverQueries(queries, distThreshold) match {
-      case Some(qs) =>
-        hnswWalkDriver(s, dir, layeredIndex(s, dir, edges, memoKey), qs, k, beam, rounds, probe)
-      case None => hnswSearchRoundsDist(s, dir, edges, memoKey, queries, k, beam, rounds)
-    }
-
-  /** Fully distributed layered descent — the large-Q path: the 1-node
-    * greedy state per upper layer and the layer-0 refine beam are
-    * (q_id, node, score) frames that never visit the driver. Same
-    * phase schedule as the driver walk (entry at the top non-empty
-    * layer, [[HnswDescentRounds]] greedy rounds per layer Lmax..1,
-    * `rounds` beam rounds at layer 0), same scoring, same total order.
-    */
-  private def hnswSearchRoundsDist(s: SparkSession, dir: String, edges: DataFrame,
-                                   memoKey: String, queries: DataFrame,
-                                   k: Int, beam: Int, rounds: Int): DataFrame = {
-    val undL = layeredIndex(s, dir, edges, memoKey)
-    val qn = withNorm(queries.select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idx = undL.repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                     probe: Boolean = false): DataFrame = {
     val (entryNodes, maxLevel) = hnswEntryState(s, dir)
-    val entry = qn.crossJoin(entryNodes)
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"))
-    var state = distCutRound(entry.limit(0), entry, 1)
-    def scoredFrom(layer: Long): DataFrame =
-      idx.filter(col("layer") === layer)
-        .join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-        .join(qn, "q_id")
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst").as("node"),
-          round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-            .as("score"))
-    // upper-layer greedy descent: one distCutRound per round. Two r17
-    // alternatives were MEASURED SLOWER at 10x/Q=2000 and rejected:
-    // (a) chaining a layer's rounds into one plan with the lineage cut
-    // per LAYER — 20.6s vs 15.7s, because the pooled union references
-    // the prior state subtree twice so round r's probe re-executes
-    // inside round r+1's plan; (b) replacing the distinct+window cut
-    // with a map-side-combinable argmax aggregation — 17.1-17.5s vs
-    // 15.7-15.9s paired same-session runs, the two narrow shuffles of
-    // the Q-row state pipeline better than one struct-max shuffle.
-    // ~0.55s/round of fixed stage+checkpoint latency is the measured
-    // local floor of this path (docs/bench_r17_scale_probes.jsonl).
-    // per-phase fixed points (r21, [[distUnchanged]]): a greedy round
-    // that doesn't move the 1-node state ends that layer's descent; a
-    // beam round that leaves the beam unchanged ends the walk
-    for (l <- maxLevel to 1L by -1L) {
-      var r = 0
-      var converged = false
-      while (r < HnswDescentRounds && !converged) {
-        r += 1
-        val next = distCutRound(state, scoredFrom(l), 1)
-        converged = distUnchanged(next, state)
-        state = next
-      }
-    }
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val next = distCutRound(state, scoredFrom(0L), beam)
-      converged = distUnchanged(next, state)
-      state = next
-    }
-    qn.unpersist(false)
-    idx.unpersist(false)
-    distFinal(state, k)
+    walkBatch(s, layeredIndex(s, dir, edges, memoKey), entryNodes, FloatCos, queries, k, beam,
+      rounds, Some(maxLevel), None, distThreshold, probe)
   }
 
   /** The driver-ranked layered walk over a PREPARED per-layer serving
@@ -4114,106 +4012,20 @@ object Ann {
       GraphSearchFilterMod, GraphSearchFilterRes)
 
   /** Routed entry for EXPLICIT query batches through the FILTERED
-    * layered walk — the same [[GraphSearchDistQ]] dispatch every other
-    * serving walk has: at or below the threshold the dual per-query
-    * states live on the driver (bounded by the request), above it the
-    * descent and base rounds run as Spark jobs
-    * ([[hnswFilteredRoundsDist]]) whose state never visits the driver.
-    * Values identical on both paths (same scoring, same adaptive ef,
-    * same (score desc, node) total order) — spec-asserted in
-    * Round17OpsSpec.
+    * layered walk ([[walkBatch]]): the layered index entered at the
+    * corpus's top level, with the keyed label filter. Values identical
+    * on both paths — spec-asserted in Round17OpsSpec.
     */
   private[graft] def hnswSearchFilteredBatch(s: SparkSession, dir: String, queries: DataFrame,
                                              k: Int = GraphSearchK,
                                              beam: Int = GraphSearchBeam,
                                              rounds: Int = GraphSearchRounds,
                                              distThreshold: Int = GraphSearchDistQ,
-                                             probe: Boolean = false): DataFrame =
-    driverQueries(queries, distThreshold) match {
-      case Some(qs) =>
-        val (entryNodes, maxLevel) = hnswEntryState(s, dir)
-        driverWalk(s, layeredIndex(s, dir, hnswGraph(s, dir), "hnsw_search_index"), entryNodes,
-          FloatCos, qs, k, beam, rounds, descent = Some(maxLevel),
-          filter = Some(WalkFilter(dir, false, GraphSearchFilterMod, GraphSearchFilterRes)),
-          probe = probe)
-      case None => hnswFilteredRoundsDist(s, dir, queries, k, beam, rounds,
-        GraphSearchFilterMod, GraphSearchFilterRes)
-    }
-
-  /** Fully distributed filtered layered rounds — the large-Q path:
-    * per-round state stays as (q_id, node, score) frames on executors
-    * ([[distCutRound]] per descent round, twice per base round for the
-    * dual state), mirroring [[hnswSearchRoundsDist]] +
-    * [[graphSearchFilteredRoundsDist]].
-    */
-  private def hnswFilteredRoundsDist(s: SparkSession, dir: String, queries: DataFrame,
-                                     k: Int, beam: Int, rounds: Int,
-                                     fMod: Long, fRes: Long): DataFrame = {
-    val nTot = Graft.tableRows(s, dir, "embeddings")
-    val ef = adaptiveEf(beam, nTot, filterPassCount(s, dir, byId = false, fMod, fRes))
-    val qn = withNorm(queries.select(col("q_id").as("vec_id"), col("qv").as("embedding")))
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idx = layeredIndex(s, dir, hnswGraph(s, dir), "hnsw_search_index")
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                                             probe: Boolean = false): DataFrame = {
     val (entryNodes, maxLevel) = hnswEntryState(s, dir)
-    val entry = qn.crossJoin(entryNodes)
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(VectorOps.dot(col("nv"), col("qv")) / (VectorOps.norm(col("nv")) * col("qnrm")), 6)
-          .as("score"))
-    var state = distCutRound(entry.limit(0), entry, 1)
-    // descent fixed point per layer (r21, [[distUnchanged]])
-    for (l <- maxLevel to 1L by -1L) {
-      var dr = 0
-      var dconv = false
-      while (dr < HnswDescentRounds && !dconv) {
-        dr += 1
-        val scored = idx.filter(col("layer") === l)
-          .join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-          .join(qn, "q_id")
-          .filter(col("dst") =!= col("q_id"))
-          .select(col("q_id"), col("dst").as("node"),
-            round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-              .as("score"))
-        val next = distCutRound(state, scored, 1)
-        dconv = distUnchanged(next, state)
-        state = next
-      }
-    }
-    // accumulator seed: the descent's arrival node where it passes —
-    // one scan with the Q-row state broadcast onto it
-    var res = distCutRound(state.limit(0),
-      Graft.embeddings(s, dir)
-        .select(col("vec_id").as("node"), col("label").as("nlabel"))
-        .filter(pmod(col("nlabel").cast("long"), lit(fMod)) === lit(fRes))
-        .join(broadcast(state), "node")
-        .select(col("q_id"), col("node"), col("score")), k)
-    // dual-state fixed point (r21, [[distUnchanged]])
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val scored = idx.filter(col("layer") === 0L)
-        .join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-        .join(qn, "q_id")
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst").as("node"),
-          round(VectorOps.dot(col("dv"), col("qv")) / (col("dnrm") * col("qnrm")), 6)
-            .as("score"),
-          (pmod(col("dlabel").cast("long"), lit(fMod)) === lit(fRes)).as("pass"))
-        .localCheckpoint(true)
-      val nextState = distCutRound(state, scored.select(col("q_id"), col("node"), col("score")), ef)
-      val nextRes = distCutRound(res, scored.filter(col("pass"))
-        .select(col("q_id"), col("node"), col("score")), k)
-      converged = distUnchanged(nextState, state) && distUnchanged(nextRes, res)
-      state = nextState
-      res = nextRes
-    }
-    qn.unpersist(false)
-    idx.unpersist(false)
-    distFinal(res, k)
+    walkBatch(s, layeredIndex(s, dir, hnswGraph(s, dir), "hnsw_search_index"), entryNodes,
+      FloatCos, queries, k, beam, rounds, Some(maxLevel),
+      Some(WalkFilter(dir, false, GraphSearchFilterMod, GraphSearchFilterRes)), distThreshold, probe)
   }
 
   /** The driver-ranked filtered layered walk (see
@@ -4312,13 +4124,19 @@ object Ann {
         sqrt(call_function("lvec_dot", col("nq"), col("nq")).cast("double")).as("nn8"),
         col("nlabel"))
 
-  /** The COMPRESSED serving index (session-memoized): undirected
-    * adjacency carrying int8 codes + their integer-exact norms, not
-    * float vectors.
+  /** The COMPRESSED serving index over `edges` (session-memoized under
+    * `memoKey`): undirected adjacency carrying int8 codes + their
+    * integer-exact norms, not float vectors. Built over [[nswGraph]]
+    * (`graph_search_index_int8`) and over the DEDUP-GATED build
+    * [[nswGraphDeduped]] (`dedup_search_index_int8`) — the quantized
+    * tier of the repaired graph, the composition a fleet ships (Qdrant =
+    * scalar quantization + HNSW, and a fleet that repairs its index
+    * quantizes the repaired one).
     */
-  private def int8Index(s: SparkSession, dir: String): DataFrame =
-    Graft.memoFlat("graph_search_index_int8", dir) {
-      val edges = nswGraph(s, dir)
+  private def int8IndexOver(s: SparkSession, dir: String, edges: => DataFrame,
+                            memoKey: String): DataFrame =
+    Graft.memoFlat(memoKey, dir) {
+      val e = edges
       val en = Graft.embeddings(s, dir)
         .select(col("vec_id").as("dst"),
           call_function("fvec_quantize", col("embedding")).as("dq"),
@@ -4326,8 +4144,8 @@ object Ann {
         .select(col("dst"), col("dq"),
           sqrt(call_function("lvec_dot", col("dq"), col("dq")).cast("double")).as("dn8"),
           col("dlabel"))
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      e.select(col("src"), col("dst"))
+        .union(e.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
         .join(en.hint("SHUFFLE_HASH"), "dst")
         // the filterable payload ships with the quantized index too —
@@ -4337,30 +4155,11 @@ object Ann {
         .repartition(indexPartitions(Graft.tableRows(s, dir, "embeddings")), col("src"))
     }
 
-  /** The COMPRESSED serving index over the DEDUP-GATED build — the
-    * quantized tier of the REPAIRED graph (the deployment actually
-    * ships this composition: Qdrant = scalar quantization + HNSW, and a
-    * fleet that repairs its index quantizes the repaired one): the
-    * undirected closure of survivor + attach edges carrying int8 codes
-    * + integer-exact norms, never float vectors.
-    */
+  private def int8Index(s: SparkSession, dir: String): DataFrame =
+    int8IndexOver(s, dir, nswGraph(s, dir), "graph_search_index_int8")
+
   private def int8DedupIndex(s: SparkSession, dir: String): DataFrame =
-    Graft.memoFlat("dedup_search_index_int8", dir) {
-      val edges = nswGraphDeduped(s, dir)
-      val en = Graft.embeddings(s, dir)
-        .select(col("vec_id").as("dst"),
-          call_function("fvec_quantize", col("embedding")).as("dq"),
-          col("label").as("dlabel"))
-        .select(col("dst"), col("dq"),
-          sqrt(call_function("lvec_dot", col("dq"), col("dq")).cast("double")).as("dn8"),
-          col("dlabel"))
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .join(en.hint("SHUFFLE_HASH"), "dst")
-        .select(col("src"), col("dst"), col("dq"), col("dn8"), col("dlabel"))
-        .repartition(indexPartitions(Graft.tableRows(s, dir, "embeddings")), col("src"))
-    }
+    int8IndexOver(s, dir, nswGraphDeduped(s, dir), "dedup_search_index_int8")
 
   /** The int8 beam walk SERVED OFF the dedup-gated build — quantized ×
     * deduped, the serving-matrix cell a deployment actually runs (4×
@@ -4493,59 +4292,16 @@ object Ann {
       entryOverride = Some((g.entryNodes, g.maxLevel)))
   }
 
-  /** Routed entry for EXPLICIT query batches through the int8 walk —
-    * [[beamSearchBatch]]'s dispatch applied to the quantized serving
-    * tier; values identical on both paths (Round16OpsSpec).
+  /** Routed entry for EXPLICIT query batches through the int8 walk
+    * ([[walkBatch]]) — the quantized serving tier; values identical on
+    * both paths (Round16OpsSpec).
     */
   private[graft] def graphSearchInt8Batch(s: SparkSession, dir: String, queries: DataFrame,
                                           k: Int, beam: Int, rounds: Int,
                                           distThreshold: Int = GraphSearchDistQ,
                                           probe: Boolean = false): DataFrame =
-    driverQueries(queries, distThreshold) match {
-      case Some(qs) => driverWalk(s, int8Index(s, dir), int8Cents(s, dir), Int8Cos, qs,
-        k, beam, rounds, probe = probe)
-      case None => graphSearchInt8RoundsDist(s, dir, queries, k, beam, rounds)
-    }
-
-  /** Fully distributed int8 rounds — the large-Q path over the
-    * quantized index: beam state never visits the driver; scoring is
-    * the same integer-exact lvec_dot cosine as the driver walk.
-    */
-  private def graphSearchInt8RoundsDist(s: SparkSession, dir: String, queries: DataFrame,
-                                        k: Int, beam: Int, rounds: Int): DataFrame = {
-    val qn = queries
-      .select(col("q_id"), call_function("fvec_quantize", col("qv")).as("q8"))
-      .select(col("q_id"), col("q8"),
-        sqrt(call_function("lvec_dot", col("q8"), col("q8")).cast("double")).as("qn8"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idx = int8Index(s, dir).repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents8 = int8Cents(s, dir)
-    val entry = qn.crossJoin(cents8)
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(call_function("lvec_dot", col("nq"), col("q8")).cast("double")
-          / (col("nn8") * col("qn8")), 6).as("score"))
-    var state = distCutRound(entry.limit(0), entry, 1)
-    // fixed-point early exit (r21, [[distUnchanged]])
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val scored = idx.join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-        .join(qn, "q_id")
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst").as("node"),
-          round(call_function("lvec_dot", col("dq"), col("q8")).cast("double")
-            / (col("dn8") * col("qn8")), 6).as("score"))
-      val next = distCutRound(state, scored, beam)
-      converged = distUnchanged(next, state)
-      state = next
-    }
-    qn.unpersist(false)
-    idx.unpersist(false)
-    distFinal(state, k)
-  }
+    walkBatch(s, int8Index(s, dir), int8Cents(s, dir), Int8Cos, queries, k, beam, rounds,
+      None, None, distThreshold, probe)
 
   /** The driver-ranked int8 walk (see [[graphSearchInt8]]) over
     * EXPLICIT index frames: callers differ only in where the (src, dst,
@@ -4589,8 +4345,8 @@ object Ann {
   }
 
   /** Routed entry for EXPLICIT query batches through the int8-FILTERED
-    * walk — the [[GraphSearchDistQ]] dispatch applied to the sixth
-    * serving walk; values identical on both paths (Round17OpsSpec).
+    * walk ([[walkBatch]]); values identical on both paths
+    * (Round17OpsSpec).
     */
   private[graft] def graphSearchInt8FilteredBatch(s: SparkSession, dir: String,
                                                   queries: DataFrame,
@@ -4599,67 +4355,9 @@ object Ann {
                                                   rounds: Int = GraphSearchRounds,
                                                   distThreshold: Int = GraphSearchDistQ,
                                                   probe: Boolean = false): DataFrame =
-    driverQueries(queries, distThreshold) match {
-      case Some(qs) => driverWalk(s, int8Index(s, dir), int8Cents(s, dir), Int8Cos, qs,
-        k, beam, rounds,
-        filter = Some(WalkFilter(dir, false, GraphSearchFilterMod, GraphSearchFilterRes)),
-        probe = probe)
-      case None => int8FilteredRoundsDist(s, dir, queries, k, beam, rounds,
-        GraphSearchFilterMod, GraphSearchFilterRes)
-    }
-
-  /** Fully distributed int8-filtered rounds — the large-Q path: dual
-    * per-round state stays on executors ([[distCutRound]] twice per
-    * round), mirroring [[graphSearchFilteredRoundsDist]] under the
-    * integer-exact quantized score.
-    */
-  private def int8FilteredRoundsDist(s: SparkSession, dir: String, queries: DataFrame,
-                                     k: Int, beam: Int, rounds: Int,
-                                     fMod: Long, fRes: Long): DataFrame = {
-    val nTot = Graft.tableRows(s, dir, "embeddings")
-    val ef = adaptiveEf(beam, nTot, filterPassCount(s, dir, byId = false, fMod, fRes))
-    val qn = queries
-      .select(col("q_id"), call_function("fvec_quantize", col("qv")).as("q8"))
-      .select(col("q_id"), col("q8"),
-        sqrt(call_function("lvec_dot", col("q8"), col("q8")).cast("double")).as("qn8"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val idx = int8Index(s, dir).repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val entry = qn.crossJoin(int8Cents(s, dir))
-      .filter(col("node") =!= col("q_id"))
-      .select(col("q_id"), col("node"),
-        round(call_function("lvec_dot", col("nq"), col("q8")).cast("double")
-          / (col("nn8") * col("qn8")), 6).as("score"),
-        (pmod(col("nlabel").cast("long"), lit(fMod)) === lit(fRes)).as("pass"))
-      .localCheckpoint(true)
-    var state = distCutRound(entry.limit(0).drop("pass"),
-      entry.select(col("q_id"), col("node"), col("score")), 1)
-    var res = distCutRound(entry.limit(0).drop("pass"),
-      entry.filter(col("pass")).select(col("q_id"), col("node"), col("score")), k)
-    // dual-state fixed point (r21, [[distUnchanged]])
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      r += 1
-      val scored = idx.join(state.select(col("q_id"), col("node")), col("src") === col("node"))
-        .join(qn, "q_id")
-        .filter(col("dst") =!= col("q_id"))
-        .select(col("q_id"), col("dst").as("node"),
-          round(call_function("lvec_dot", col("dq"), col("q8")).cast("double")
-            / (col("dn8") * col("qn8")), 6).as("score"),
-          (pmod(col("dlabel").cast("long"), lit(fMod)) === lit(fRes)).as("pass"))
-        .localCheckpoint(true)
-      val nextState = distCutRound(state, scored.select(col("q_id"), col("node"), col("score")), ef)
-      val nextRes = distCutRound(res, scored.filter(col("pass"))
-        .select(col("q_id"), col("node"), col("score")), k)
-      converged = distUnchanged(nextState, state) && distUnchanged(nextRes, res)
-      state = nextState
-      res = nextRes
-    }
-    qn.unpersist(false)
-    idx.unpersist(false)
-    distFinal(res, k)
-  }
+    walkBatch(s, int8Index(s, dir), int8Cents(s, dir), Int8Cos, queries, k, beam, rounds,
+      None, Some(WalkFilter(dir, false, GraphSearchFilterMod, GraphSearchFilterRes)),
+      distThreshold, probe)
 
   /** The dual-state int8 walk over caller-supplied quantized index
     * frames (und8 with dlabel, cents8 with nlabel).

@@ -154,7 +154,7 @@ class Round15OpsSpec extends SparkSpec {
   }
 
   test("distributed rounds reuse the index partitioning: only the frontier exchanges") {
-    // the scale contract of beamSearchRoundsDist: the 2kN-row index is
+    // the scale contract of Ann.distWalk: the 2kN-row index is
     // pre-partitioned by src ONCE (persisted with its hash partitioning
     // intact), so each of the 8 rounds exchanges only the Q·beam
     // frontier — at 100 TB the index never reshuffles per round. This

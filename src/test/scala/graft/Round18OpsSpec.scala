@@ -137,6 +137,19 @@ class Round18OpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out.last._2 === n, s"expected full reach, got ${out.last._2}/$n")
   }
 
+  test("a census whose adjacency names a node outside the corpus fails at its cap") {
+    import spark.implicits._
+    // corpus {0, 1, 2}; node 99 is not in it, so round 1 reaches 4 of a
+    // 3-node corpus — the early fill would report 133% reach
+    val und = Seq((0L, 1L), (0L, 2L), (0L, 99L)).toDF("src", "dst")
+    val entries = Seq(0L).toDF("node")
+    val e = intercept[IllegalStateException](Ann.censusCountsOver(und, entries, 4, cap = 3L))
+    assert(e.getMessage.contains("cap of 3"), e.getMessage)
+    // inside the corpus the same census fills at the cap
+    val inside = Ann.censusCountsOver(und.filter(col("dst") =!= 99L), entries, 4, cap = 3L)
+    assert(inside === Seq((0L, 1L), (1L, 3L), (2L, 3L), (3L, 3L), (4L, 3L)))
+  }
+
   test("connectivity census: duplicate-heavy corpus fragments, dedup restores full reach") {
     // the docs/bench_r18_connectivity.md pathology as a pinned planted
     // case, closing the loop between the dedup and ANN families: exact

@@ -192,30 +192,39 @@ class ServingLifecycleSpec extends SparkSpec {
     Seq((id, v)).toDF("q_id", "qv")
   }
 
-  private def flatCents: DataFrame = Graft.embeddings(spark, dir)
-    .filter(col("vec_id") < Ann.sqrtFanout(Graft.tableRows(spark, dir, "embeddings")))
+  private def flatCents(d: String): DataFrame = Graft.embeddings(spark, d)
+    .filter(col("vec_id") < Ann.sqrtFanout(Graft.tableRows(spark, d, "embeddings")))
     .select(col("vec_id").as("node"), col("embedding").as("nv"), col("label").as("nlabel"))
 
-  /** Each serving walk as (distThreshold, probe) => rows. */
-  private def matrix(q: DataFrame): Seq[(String, (Int, Boolean) => DataFrame)] = Seq(
-    "flat" -> ((t, p) => Ann.beamSearchBatch(spark, Ann.graphSearchIndex(spark, dir), flatCents,
+  /** Each serving walk over the corpus `d` as (distThreshold, probe) => rows. */
+  private def matrix(q: DataFrame, d: String = dir): Seq[(String, (Int, Boolean) => DataFrame)] = Seq(
+    "flat" -> ((t, p) => Ann.beamSearchBatch(spark, Ann.graphSearchIndex(spark, d), flatCents(d),
       q, 4, 32, 8, distThreshold = t, probe = p)),
-    "flat-filtered" -> ((t, p) => Ann.graphSearchFilteredBatch(spark, dir, q, 4, 32, 8,
+    "flat-filtered" -> ((t, p) => Ann.graphSearchFilteredBatch(spark, d, q, 4, 32, 8,
       byId = false, Ann.GraphSearchFilterMod, Ann.GraphSearchFilterRes, t, p)),
-    "layered" -> ((t, p) => Ann.hnswSearchBatch(spark, dir, Ann.hnswGraph(spark, dir),
+    "layered" -> ((t, p) => Ann.hnswSearchBatch(spark, d, Ann.hnswGraph(spark, d),
       "hnsw_search_index", q, 4, 32, 8, t, p)),
-    "layered-filtered" -> ((t, p) => Ann.hnswSearchFilteredBatch(spark, dir, q, 4, 32, 8, t, p)),
-    "int8" -> ((t, p) => Ann.graphSearchInt8Batch(spark, dir, q, 4, 32, 8, t, p)),
-    "int8-filtered" -> ((t, p) => Ann.graphSearchInt8FilteredBatch(spark, dir, q, 4, 32, 8, t, p)))
+    "layered-filtered" -> ((t, p) => Ann.hnswSearchFilteredBatch(spark, d, q, 4, 32, 8, t, p)),
+    "int8" -> ((t, p) => Ann.graphSearchInt8Batch(spark, d, q, 4, 32, 8, t, p)),
+    "int8-filtered" -> ((t, p) => Ann.graphSearchInt8FilteredBatch(spark, d, q, 4, 32, 8, t, p)))
 
   test("every walk: snapshot source == Spark-probe source == distributed path") {
-    matrix(queries(30)).foreach { case (name, walk) =>
-      val snap = rows(walk(Int.MaxValue, false))
-      val probe = rows(walk(Int.MaxValue, true))
-      val dist = rows(walk(0, false))
-      assert(snap.nonEmpty, name)
-      assert(snap === probe, s"$name: snapshot source diverged from the probe source")
-      assert(snap === dist, s"$name: snapshot source diverged from the distributed rounds")
+    // the same vectors with every label moved off the keyed filter's
+    // residue: the filter passes no node of this corpus
+    val noPass = tempSfDir("embeddings" -> Graft.embeddings(spark, dir).withColumn("label",
+      when(pmod(col("label"), lit(Ann.GraphSearchFilterMod)) === Ann.GraphSearchFilterRes,
+        col("label") + 1).otherwise(col("label")).cast("int")))
+    Seq(dir, noPass).foreach { d =>
+      matrix(queries(30), d).foreach { case (name, walk) =>
+        val snap = rows(walk(Int.MaxValue, false))
+        val probe = rows(walk(Int.MaxValue, true))
+        val dist = rows(walk(0, false))
+        if (d == noPass && name.endsWith("filtered"))
+          assert(snap.isEmpty, s"$name: a filter no node passes returned rows")
+        else assert(snap.nonEmpty, name)
+        assert(snap === probe, s"$name: snapshot source diverged from the probe source")
+        assert(snap === dist, s"$name: snapshot source diverged from the distributed rounds")
+      }
     }
   }
 
@@ -232,6 +241,9 @@ class ServingLifecycleSpec extends SparkSpec {
     val snap = walk(false)
     assert(snap.nonEmpty && snap.forall(_._3 % 100 == 2))
     assert(snap === walk(true))
+    // the distributed walk seeds its accumulator by the corpus join
+    assert(snap === rows(Ann.walkBatch(spark, gen, entry, Ann.FloatCos, q, 4, 32, 8, Some(ml),
+      Some(Ann.WalkFilter(dir, byId = true, 100L, 2L)), distThreshold = 0, probe = false)))
   }
 
   test("an arrival node absent from the snapshot payload keeps the corpus lookup") {
@@ -253,6 +265,9 @@ class ServingLifecycleSpec extends SparkSpec {
     val snap = walk(false)
     assert(snap.nonEmpty)
     assert(snap === walk(true))
+    assert(snap === rows(Ann.walkBatch(spark, cut, entry, Ann.FloatCos, q, 4, 32, 8, Some(ml),
+      Some(Ann.WalkFilter(dir, byId = false, Ann.GraphSearchFilterMod, res)),
+      distThreshold = 0, probe = false)))
   }
 
   test("a zero-norm query fails on every path, as the probe's division by zero does") {
@@ -330,6 +345,24 @@ class ServingLifecycleSpec extends SparkSpec {
       val probeJobs = counter.jobsDuring(
         Ann.beamSearchBatch(spark, fa, fe, qs.head, 4, 32, 8, probe = true).collect())
       assert(probeJobs >= 2, s"probe source ran $probeJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("a distributed walk runs no more jobs than the per-kind executors it replaced") {
+    // the jobs this batch ran when each kind had its own distributed
+    // executor, before they became one (Spark's adaptive execution
+    // submits a job per query stage)
+    val bound = Map("flat" -> 69, "flat-filtered" -> 106, "layered" -> 125,
+      "layered-filtered" -> 162, "int8" -> 72, "int8-filtered" -> 108)
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      matrix(queries(30)).foreach { case (name, walk) =>
+        walk(0, false).collect() // builds the memoized index and filter statistics
+        val jobs = counter.jobsDuring(walk(0, false).collect())
+        assert(jobs <= bound(name), s"$name: $jobs jobs, above the ${bound(name)} it ran before")
+        info(s"$name: $jobs jobs")
+      }
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 }
